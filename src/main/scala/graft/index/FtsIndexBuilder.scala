@@ -715,29 +715,29 @@ object FtsIndexBuilder {
     * is strictly ascending and every segment block comes out
     * byte-identical to the single-file layout's (FtsBuildSpec pins
     * this). Memory is O(bucket) per group — a bucket holds at most
-    * bucketBlocks x blockSize postings of ONE term, regardless of df. */
+    * bucketBlocks x blockSize postings of ONE term, regardless of df.
+    *
+    * Each group is encoded on its own, so a block never spans a bucket
+    * boundary: the hash exchange may send buckets b0 and b2 of a term to
+    * this partition and b1 to another, and a block running from b0 into
+    * b2 would cover b1's doc range, which block-max WAND (it assumes a
+    * shard's blocks of a term are disjoint and ordered) then skips. */
   private[graft] def encodeRunPartition(it: Iterator[RunRow],
                                         blockSize: Int): Iterator[SegmentBlock] = {
-    type Posting = (Int, String, String, Long, Long, Long, Array[Byte])
     val rows = it.buffered
-    val postings: Iterator[Posting] = new Iterator[Posting] {
-      private var group: Iterator[Posting] = Iterator.empty
-      override def hasNext: Boolean = group.hasNext || rows.hasNext
-      override def next(): Posting = {
-        if (!group.hasNext) {
-          val h = rows.head
-          val key = (h._1, h._2, h._3, h._4)
-          val runs = scala.collection.mutable.ArrayBuffer.empty[RunRow]
-          while (rows.hasNext && {
-            val r = rows.head
-            (r._1, r._2, r._3, r._4) == key
-          }) runs += rows.next()
-          group = decodeMerged(runs)
-        }
-        group.next()
+    new Iterator[Iterator[SegmentBlock]] {
+      override def hasNext: Boolean = rows.hasNext
+      override def next(): Iterator[SegmentBlock] = {
+        val h = rows.head
+        val key = (h._1, h._2, h._3, h._4)
+        val runs = scala.collection.mutable.ArrayBuffer.empty[RunRow]
+        while (rows.hasNext && {
+          val r = rows.head
+          (r._1, r._2, r._3, r._4) == key
+        }) runs += rows.next()
+        encodePartition(decodeMerged(runs), blockSize)
       }
-    }
-    encodePartition(postings, blockSize)
+    }.flatten
   }
 
   /** Decode one key group's runs into ascending-doc posting order: the
@@ -943,12 +943,13 @@ object FtsIndexBuilder {
     if (timing) println(f"[timing] g$gid%d manifest ${(System.currentTimeMillis() - t0) / 1e3}%.2fs")
   }
 
-  /** Streaming block encoder over a (shard, field, term, doc_id)-sorted
-    * iterator. Memory is O(blockSize), independent of posting-list length —
-    * a term with df = N (stopword-grade skew) streams through without
-    * buffering; range partitioning on (shard, field, term, doc_id) has
-    * already split such a list across partitions by doc range (the
-    * north-rule skew treatment).
+  /** Streaming block encoder over ONE (shard, field, term, bucket)
+    * group's doc-ascending postings ([[encodeRunPartition]]): a block
+    * every `blockSize` postings. Memory is O(blockSize), independent of
+    * posting-list length — a term with df = N (stopword-grade skew) streams
+    * through without buffering; the exchange on (shard, field, term,
+    * bucket) has already split such a list across partitions by doc range
+    * (the north-rule skew treatment).
     */
   private[index] def encodePartition(
       it: Iterator[(Int, String, String, Long, Long, Long, Array[Byte])],
@@ -965,9 +966,7 @@ object FtsIndexBuilder {
         var maxTf = 0L
         var minDl = Long.MaxValue
         var sumTf = 0L
-        while (buf.hasNext && buf.head._1 == shard &&
-               buf.head._2 == field && buf.head._3 == term &&
-               docIds.length < blockSize) {
+        while (buf.hasNext && docIds.length < blockSize) {
           val (_, _, _, doc, dl, tf, posBytes) = buf.next()
           docIds += doc; tfs += tf; dls += dl
           sumTf += tf

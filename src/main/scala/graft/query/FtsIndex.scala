@@ -130,9 +130,6 @@ class FtsIndex(spark: SparkSession, root: String) {
     }
   }
 
-  /** Whether the dictionary carries the fuzzy-prefilter bitmap column. */
-  private lazy val dictHasCmask: Boolean = dict.columns.contains("cmask")
-
   /** (repo, path, gen) delete markers across all deltas. */
   val tombstones: Option[DataFrame] = {
     val paths = deltaSub("tombstones")
@@ -193,12 +190,25 @@ class FtsIndex(spark: SparkSession, root: String) {
     * alive-semi-join handles any size. */
   private val maxDeadDocs = 1 << 22
 
+  /** Key-addressed stores over the snapshot's dictionary, segments and
+    * alive docs ([[SnapshotStore]]): the warm cache's misses, the df
+    * lookup and fuzzy/regex expansion run as one plain `runJob` each over
+    * these, never as a Catalyst plan. The exhaustive and cluster-WAND
+    * scorers keep reading the relations above. */
+  private val dictStore = new SnapshotStore(
+    "graft-dict-store", () => SnapshotStore.dictParts(dict))
+  private val segmentStore = new SnapshotStore(
+    "graft-segment-store", () => SnapshotStore.segmentParts(segments))
+  private val docStore = new SnapshotStore(
+    "graft-doc-store", () => SnapshotStore.docParts(effectiveDocs))
+
   /** Driver-side LRU (field, term) -> df over this SNAPSHOT's dictionary
-    * (immutable once loaded — delta generations produce a new snapshot).
-    * Every query path starts with this dictionary point lookup; keeping
-    * it warm removes one small-but-latency-bearing Spark job from every
-    * repeated query, the daemon regime the reference serves from. A miss
-    * is one pruned job over the (persisted) dict for ALL missing terms. */
+    * (immutable once loaded — delta generations produce a new snapshot):
+    * the ONE df source of every query path, the warm cache included.
+    * Keeping it warm removes one small-but-latency-bearing Spark job from
+    * every repeated query, the daemon regime the reference serves from. A
+    * miss is one `runJob` over the dictionary store for ALL missing
+    * terms. */
   private val dfCache = graft.util.Lru[(String, String), Long](1 << 16)
 
   private[query] def dfsOf(fts: Seq[(String, String)])
@@ -208,10 +218,8 @@ class FtsIndex(spark: SparkSession, root: String) {
     }
     val missing = fts.filterNot(hits.contains)
     if (missing.isEmpty) return hits
-    val pred = FtsIndex.orAll(missing.map { case (f, t) =>
-      col("field") === f && col("term") === t })
-    val got = dict.where(pred).select("field", "term", "df").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val got = dictStore.lookup(SnapshotStore.dfLookup(missing.toArray))
+      .map(r => (r._1, r._2) -> r._3).toMap
     // df = 0 marks "not in the dictionary" (real entries always have
     // df >= 1) — cached too, so repeated misses don't re-run the job
     val withZeros = missing.map(ft => ft -> got.getOrElse(ft, 0L)).toMap
@@ -220,6 +228,24 @@ class FtsIndex(spark: SparkSession, root: String) {
     }
     hits ++ withZeros
   }
+
+  /** Every posting block of the given (field, term)s, base and delta,
+    * each term's blocks sorted by (shard, first_doc): one `runJob` over
+    * the segment store. Absent terms are absent from the map. */
+  private[query] def blocksOf(fts: Seq[(String, String)])
+      : Map[(String, String), Array[SegmentBlock]] =
+    segmentStore.lookup(SnapshotStore.blockLookup(fts.distinct.toArray))
+      .groupBy(_._1)
+      .map { case (ft, parts) =>
+        ft -> parts.flatMap(_._2).sortBy(b => (b.shard, b.first_doc))
+      }
+
+  /** Alive docs' serving rows by doc_id (content null unless asked for):
+    * one `runJob` over the doc store. Unknown or dead ids are absent. */
+  private[query] def docRowsOf(ids: Seq[Long], withContent: Boolean)
+      : Map[Long, SnapshotStore.DocEntry] =
+    docStore.lookup(SnapshotStore.docLookup(ids.distinct.toArray,
+      withContent)).toMap
 
   /** Sorted doc_ids whose postings survive in the segments but which a
     * newer tombstone has killed — the alive filter that lets block-max
@@ -259,15 +285,19 @@ class FtsIndex(spark: SparkSession, root: String) {
   }
 
   /** Cache the index relations across queries (the reference daemon's warm
-    * index cache analog, server/cache/fts_index_cache.py). */
+    * index cache analog, server/cache/fts_index_cache.py) and build the
+    * key-addressed stores over them. Each store's build job reads its
+    * relation through the cache just registered, so ONE job per relation
+    * both fills the columnar cache and builds the store. */
   def warm(): this.type = {
     docs.persist(); segments.persist(); dict.persist()
-    docs.count(); segments.count(); dict.count()
+    docStore.materialize(); segmentStore.materialize(); dictStore.materialize()
     this
   }
 
-  /** Release relations persisted by [[warm]] (called on reload swap),
-    * plus the snapshot's dead-set broadcast if one was built.
+  /** Release relations persisted by [[warm]] (called on reload swap), the
+    * key-addressed stores, plus the snapshot's dead-set broadcast if one
+    * was built.
     *
     * The broadcast is UNPERSISTED, never destroyed: [[ReloadingFtsIndex]]
     * swaps and cools the stale snapshot while unsynchronized readers may
@@ -277,6 +307,7 @@ class FtsIndex(spark: SparkSession, root: String) {
     * when the snapshot is GC'd (ADVICE r04 #1). */
   def cool(): this.type = {
     docs.unpersist(); segments.unpersist(); dict.unpersist()
+    docStore.release(); segmentStore.release(); dictStore.release()
     val bc = deadBcCache
     if (bc != null) bc.foreach(_.unpersist())
     this
@@ -336,18 +367,12 @@ class FtsIndex(spark: SparkSession, root: String) {
   /** Expand fuzzy/regex alternatives over the term DICTIONARY into concrete
     * term sets — the Spark analog of the reference's automaton walk over
     * Tantivy's FST term dictionary (tantivy_index_manager.py:347-374 fuzzy,
-    * :492-505 regex). One dict job covers every dynamic alternative of the
-    * query; matched terms replace the alternative as plain [[TermQ]]s, so
-    * everything downstream (codegen exact scorer, block-max WAND, the
-    * driver cache) sees only exact terms, and the SEGMENTS scan is pruned
-    * by a pushable isin predicate instead of running a UDF over every
-    * block.
-    *
-    * The dict scan itself is bounded by cheap codegen prefilters before the
-    * O(len^2) Damerau UDF runs: the existing length band plus
-    * `bit_count(cmask & ~charMask(word)) <= d` — every edit introduces at
-    * most one character class the query word lacks (a transposition none),
-    * so the bitmap test is a necessary condition for distance <= d. */
+    * :492-505 regex). One dictionary-store lookup covers every dynamic
+    * alternative of the query; matched terms replace the alternative as
+    * plain [[TermQ]]s, so everything downstream (codegen exact scorer,
+    * block-max WAND, the driver cache) sees only exact terms, and the
+    * SEGMENTS scan is pruned by a pushable isin predicate instead of
+    * running a UDF over every block. */
   private[query] def expandNodes(nodes: Seq[Node]): Seq[Node] = {
     val dyn = nodes.flatMap(_.alts).collect {
       case f: FuzzyQ => f: FieldQ
@@ -364,48 +389,21 @@ class FtsIndex(spark: SparkSession, root: String) {
     }
   }
 
-  /** Dictionary expansion of dynamic (fuzzy/regex) alternatives: one Spark
-    * job for all of them, then exact driver-side re-check to attribute the
-    * matched terms to each alternative. Returned term lists are sorted for
-    * determinism. */
-  private[query] def expandAlts(dyn: Seq[FieldQ]): Map[FieldQ, Seq[TermQ]] =
-    expandAltsDf(dyn)._1
-
-  /** As [[expandAlts]], also returning each matched term's df — the
-    * expansion job scans exactly the dictionary rows whose dfs every
-    * downstream scorer needs next, so collecting df alongside saves the
-    * follow-up dictionary job on every fuzzy/regex query (the dfs are
-    * fed into the snapshot df cache here, and the caller can seed its
-    * own). */
-  private[query] def expandAltsDf(dyn: Seq[FieldQ])
-      : (Map[FieldQ, Seq[TermQ]], Map[(String, String), Long]) = {
-    val damerauLe = udf((t: String, w: String, d: Int) =>
-      Distance.damerauBounded(t, w, d) <= d)
-    val preds = dyn.map {
-      case FuzzyQ(f, w, d) =>
-        var p = col("field") === f &&
-          abs(length(col("term")) - lit(w.length)) <= d
-        if (dictHasCmask)
-          // NULL cmask (a legacy base dict merged with deltas) must PASS
-          // the prefilter, not be filtered out — the bitmap is an
-          // optimization, never a correctness gate
-          p = p && coalesce(
-            bit_count(col("cmask")
-              .bitwiseAND(lit(~Distance.charMask(w)))) <= d,
-            lit(true))
-        p && damerauLe(col("term"), lit(w), lit(d))
-      case RegexQ(f, pat) =>
-        col("field") === f && col("term").rlike(s"^(?:$pat)$$")
-      case _ => lit(false)
-    }
-    val rows = dict.where(FtsIndex.orAll(preds))
-      .select("field", "term", "df").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val dfs = rows.map(r => (r._1, r._2) -> r._3).toMap
+  /** Dictionary expansion of dynamic (fuzzy/regex) alternatives: one
+    * `runJob` over the dictionary store for all of them
+    * ([[SnapshotStore.expandLookup]]: length band and character-class
+    * bitmap prefilters before the bounded Damerau distance), then an exact
+    * driver-side re-check to attribute the matched terms to each
+    * alternative. The lookup returns exactly the dictionary rows whose dfs
+    * every downstream scorer needs next, so their dfs seed the snapshot
+    * df cache here — no follow-up df lookup on a fuzzy/regex query.
+    * Returned term lists are sorted for determinism. */
+  private[query] def expandAlts(dyn: Seq[FieldQ]): Map[FieldQ, Seq[TermQ]] = {
+    val rows = dictStore.lookup(SnapshotStore.expandLookup(dyn.toArray))
     dfCache.synchronized {
-      dfs.foreach { case (ft, df) => dfCache.put(ft, df) }
+      rows.foreach(r => dfCache.put((r._1, r._2), r._3))
     }
-    val expanded = dyn.map { a =>
+    dyn.map { a =>
       a -> (a match {
         case FuzzyQ(f, w, d) =>
           rows.iterator.filter(r => r._1 == f &&
@@ -418,7 +416,6 @@ class FtsIndex(spark: SparkSession, root: String) {
         case _ => Nil
       })
     }.toMap
-    (expanded, dfs)
   }
 
   /** Predicate over (field, term) used to prune both the segment scan and
@@ -498,11 +495,10 @@ class FtsIndex(spark: SparkSession, root: String) {
     * posting, one hash aggregate keyed by doc_id; the node bitmask encodes
     * AND-of-nodes without a second aggregation pass.
     *
-    * df/idf and the node bit are resolved DRIVER-side (one tiny pruned
-    * lookup over the cached dictionary — the same point query every other
-    * path already does) and inlined as literal CASE expressions, so the
-    * per-query plan is scan -> decode -> project -> one hash aggregate ->
-    * top-k: the former dict and node broadcast hash joins (two
+    * df/idf and the node bit are resolved DRIVER-side ([[dfsOf]], the
+    * same point lookup every other path does) and inlined as literal CASE
+    * expressions, so the per-query plan is scan -> decode -> project -> one
+    * hash aggregate -> top-k: the former dict and node broadcast hash joins (two
     * BroadcastExchanges and their build jobs per query) are gone. The
     * arithmetic mirrors the joined plan bit-for-bit (StrictMath.log — the
     * function Spark's `log` expression evaluates — over the identical

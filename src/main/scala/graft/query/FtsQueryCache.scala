@@ -1,7 +1,5 @@
 package graft.query
 
-import org.apache.spark.sql.functions._
-
 import graft.functions.PathGlob
 import graft.index.FtsSchema._
 
@@ -14,21 +12,26 @@ import graft.index.FtsSchema._
   *
   * The cluster-side [[FtsIndex]] is the source of truth; this layer keeps
   * LRUs of QUERY-TOUCHED state on the driver:
-  *   - posting blocks per (field, term) — loaded by ONE pruned Spark job on
-  *     first use (Parquet term-predicate pushdown keeps that job tiny);
-  *   - df per (field, term) from the dictionary — consulted BEFORE any
-  *     block fetch: a term whose posting list exceeds `maxDfCached`
-  *     (stopword-grade, df ~ N) is never collected to the driver; the
-  *     whole query routes to the cluster WAND path instead. This is what
-  *     makes the cache safe against a 100 TB index — the df lookup is a
-  *     dictionary point query, and only bounded posting lists ever land in
-  *     driver memory.
+  *   - posting blocks per (field, term) — fetched on first use by one
+  *     `runJob` over the snapshot's key-addressed segment store
+  *     ([[SnapshotStore]]): a hash lookup per partition, no query plan;
+  *   - df per (field, term), read through the snapshot's df cache
+  *     ([[FtsIndex.dfsOf]], the one df source; a miss is one `runJob` over
+  *     the dictionary store) and consulted BEFORE any block fetch: a term
+  *     whose posting list exceeds `maxDfCached` (stopword-grade, df ~ N)
+  *     is never collected to the driver; the whole query routes to the
+  *     cluster WAND path instead. This is what makes the cache safe
+  *     against a 100 TB index — the df lookup is a dictionary point query,
+  *     and only bounded posting lists ever land in driver memory.
   *   - fuzzy/regex dictionary expansions per alternative;
-  *   - doc metadata (repo/path/lang) and doc content rows by doc_id.
+  *   - doc metadata (repo/path/lang) and doc content rows by doc_id, fetched
+  *     from the doc store by the same kind of `runJob`.
   *
-  * Subsequent queries whose state is hot answer entirely on the driver —
-  * block-max WAND (or the exact phrase scorer) over cached blocks, zero
-  * Spark jobs — in single-digit milliseconds.
+  * A cold query therefore runs a few plain Spark jobs (df or expansion,
+  * blocks, rows) and ZERO SQL executions. Subsequent queries whose state
+  * is hot answer entirely on the driver — block-max WAND (or the exact
+  * phrase scorer) over cached blocks, zero Spark jobs — in single-digit
+  * milliseconds.
   *
   * LIVE DELTAS: the cache keeps serving while delta generations exist —
   * the streaming regime, where the reference daemon never drops its warm
@@ -112,10 +115,6 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
   /** LRU (field, term) -> DELTA posting blocks (shard >= GenBase) of THIS
     * snapshot's generation list — never inherited. */
   private val deltaBlocks = lru[(String, String), Array[SegmentBlock]](maxTerms)
-
-  /** LRU (field, term) -> df from the dictionary (the block-fetch gate);
-    * per-snapshot: every delta generation shifts df. */
-  private val termDfs = lru[(String, String), Long](maxTerms * 4)
 
   /** LRU fuzzy/regex alternative -> expanded term list; per-snapshot (a
     * delta can add dictionary terms that match a pattern). */
@@ -213,36 +212,17 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
   private lazy val deadSet: Option[Wand.DeadSet] =
     idx.deadDocs.map(ids => new Wand.DeadSet(ids)) // sorted by construction
 
-  /** df per (field, term), dictionary-backed; ONE Spark job for all misses
-    * (run OUTSIDE the lock). */
-  private def dfsFor(fts: Seq[(String, String)])
-      : Map[(String, String), Long] = {
-    val hits = termDfs.synchronized {
-      fts.flatMap(ft => Option(termDfs.get(ft)).map(ft -> _.toLong)).toMap
-    }
-    val missing = fts.filterNot(hits.contains)
-    if (missing.isEmpty) return hits
-    val pred = FtsIndex.orAll(missing.map { case (f, t) =>
-      col("field") === f && col("term") === t
-    })
-    val got = idx.dict.where(pred).select("field", "term", "df").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val withZeros = missing.map(ft => ft -> got.getOrElse(ft, 0L)).toMap
-    termDfs.synchronized {
-      withZeros.foreach { case (ft, df) => termDfs.put(ft, df) }
-    }
-    hits ++ withZeros
-  }
-
-  /** Fetch-or-load blocks for (field, term) pairs; ONE Spark job for all
-    * misses together (outside the lock). Callers must have df-gated the
-    * pairs already. The returned map is built from hits + freshly fetched
-    * rows directly — correctness never depends on what survives the LRU.
+  /** Fetch-or-load blocks for (field, term) pairs; ONE `runJob` over the
+    * segment store for all misses together (outside the lock). Callers
+    * must have df-gated the pairs already. The returned map is built from
+    * hits + freshly fetched blocks directly — correctness never depends on
+    * what survives the LRU.
     *
     * Base and delta parts cache separately: after a snapshot reload the
-    * inherited base part is already hot, and only the (tiny) delta part
-    * of each term is fetched — pruned to `shard >= GenBase` so the scan
-    * skips every base segment file. */
+    * inherited base part is already hot. A fetch returns a term's blocks
+    * from every partition, sorted by (shard, first_doc); the base/delta
+    * split happens here. A delta part that is already cached is never
+    * overwritten by a fetch made for the base part. */
   private def blocksFor(fts: Seq[(String, String)])
       : Map[(String, String), Array[SegmentBlock]] = {
     val genBase = graft.index.FtsDeltas.GenBase
@@ -276,28 +256,12 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
         (Map.empty[(String, String), Array[SegmentBlock]],
           Map.empty[(String, String), Array[SegmentBlock]])
       else {
-        val preds =
-          fullMiss.map { case (f, t) =>
-            // a base-miss term whose DELTA part is already cached only
-            // needs the base segments — without the shard bound the fetch
-            // re-reads the delta segments and the fetched delta part is
-            // discarded at assembly (deltaHits wins below) — ADVICE r05 #3
-            if (hasDeltas && deltaHits.contains((f, t)))
-              col("field") === f && col("term") === t &&
-                col("shard") < genBase
-            else col("field") === f && col("term") === t
-          } ++ deltaMiss.map { case (f, t) =>
-            col("field") === f && col("term") === t &&
-              col("shard") >= genBase
-          }
-        val got = idx.segments.where(FtsIndex.orAll(preds)).collect()
-          .groupBy(b => (b.field, b.term))
+        val got = idx.blocksOf(fullMiss ++ deltaMiss)
         def part(ft: (String, String), delta: Boolean) =
           got.getOrElse(ft, Array.empty[SegmentBlock])
             .filter(b => (b.shard >= genBase) == delta)
-            .sortBy(b => (b.shard, b.first_doc))
         val fb = fullMiss.map(ft => ft -> part(ft, delta = false)).toMap
-        val fd = (fullMiss ++ deltaMiss)
+        val fd = (fullMiss.filterNot(deltaHits.contains) ++ deltaMiss)
           .map(ft => ft -> part(ft, delta = true)).toMap
         baseBlocks.synchronized {
           fb.foreach { case (ft, bl) => baseBlocks.put(ft, bl) }
@@ -323,30 +287,17 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     }
     val missing = ids.filterNot(hits.contains)
     if (missing.isEmpty) return hits
-    val docs = idx.effectiveDocs
-    val chunked = docs.columns.contains("line_start")
-    val lsCol =
-      if (chunked) coalesce(col("line_start"), lit(1)).cast("int")
-      else lit(1)
-    val leCol =
-      if (chunked) coalesce(col("line_end"), lit(Long.MaxValue)).cast("long")
-      else lit(Long.MaxValue)
-    val got = docs.where(col("doc_id").isin(missing: _*))
-      .select(col("doc_id"), col("repo"), col("path"), col("lang"),
-        lsCol.as("ls"), leCol.as("le")).collect()
-      .map(r => r.getLong(0) ->
-        (r.getString(1), r.getString(2), r.getString(3), r.getInt(4),
-          r.getLong(5))).toMap
+    val got = idx.docRowsOf(missing, withContent = false)
+      .map { case (id, e) => id -> (e.repo, e.path, e.lang, e.ls, e.le) }
     metaRows.synchronized {
       got.foreach { case (id, row) => metaRows.put(id, row) }
     }
     hits ++ got
   }
 
-  /** Meta AND content rows for the FINAL top-k ids in ONE pruned job
-    * (they were two identical isin scans over the doc store — the cold
-    * path paid two jobs where one carries both column sets). Ids missing
-    * from EITHER cache are fetched together; both LRUs are populated. */
+  /** Meta AND content rows for the FINAL top-k ids in ONE doc-store lookup.
+    * Ids missing from EITHER cache are fetched together; both LRUs are
+    * populated. */
   private def rowsFor(ids: Seq[Long])
       : (Map[Long, (String, String, String, Int, Long)], Map[Long, String]) = {
     val metaHits = metaRows.synchronized {
@@ -358,21 +309,10 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     val missing = ids.filter(id =>
       !metaHits.contains(id) || !contentHits.contains(id)).distinct
     if (missing.isEmpty) return (metaHits, contentHits)
-    val docs = idx.effectiveDocs
-    val chunked = docs.columns.contains("line_start")
-    val lsCol =
-      if (chunked) coalesce(col("line_start"), lit(1)).cast("int")
-      else lit(1)
-    val leCol =
-      if (chunked) coalesce(col("line_end"), lit(Long.MaxValue)).cast("long")
-      else lit(Long.MaxValue)
-    val got = docs.where(col("doc_id").isin(missing: _*))
-      .select(col("doc_id"), col("repo"), col("path"), col("lang"),
-        lsCol.as("ls"), leCol.as("le"), col("content")).collect()
-    val gotMeta = got.map(r => r.getLong(0) ->
-      (r.getString(1), r.getString(2), r.getString(3), r.getInt(4),
-        r.getLong(5))).toMap
-    val gotContent = got.map(r => r.getLong(0) -> r.getString(6)).toMap
+    val got = idx.docRowsOf(missing, withContent = true)
+    val gotMeta = got.map { case (id, e) =>
+      id -> (e.repo, e.path, e.lang, e.ls, e.le) }
+    val gotContent = got.map { case (id, e) => id -> e.content }
     metaRows.synchronized {
       gotMeta.foreach { case (id, row) => metaRows.put(id, row) }
     }
@@ -382,13 +322,14 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     (metaHits ++ gotMeta, contentHits ++ gotContent)
   }
 
-  /** Expand fuzzy/regex alternatives, LRU-cached; cluster dict job on miss
-    * (via [[FtsIndex.expandAlts]] — the same expansion the cluster path
-    * runs, so results are identical by construction). The per-call map is
-    * built from LRU hits + the expandAlts return value directly — the LRU
-    * is only a cache, never the source of truth (a query with more
-    * alternatives than the LRU capacity must not read back its own
-    * evictions — ADVICE r03 #4). */
+  /** Expand fuzzy/regex alternatives, LRU-cached; one dictionary-store
+    * lookup on miss (via [[FtsIndex.expandAlts]] — the same expansion the
+    * cluster path runs, so results are identical by construction, and it
+    * seeds the snapshot df cache the block-fetch gate reads next). The
+    * per-call map is built from LRU hits + the expandAlts return value
+    * directly — the LRU is only a cache, never the source of truth (a
+    * query with more alternatives than the LRU capacity must not read
+    * back its own evictions — ADVICE r03 #4). */
   private def expandLocal(nodes: Seq[Node]): Seq[Node] = {
     val dyn = nodes.flatMap(_.alts).collect {
       case f: FuzzyQ => f: FieldQ
@@ -401,17 +342,7 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     val missing = dyn.filterNot(hits.contains)
     val fresh: Map[FieldQ, Seq[TermQ]] =
       if (missing.isEmpty) Map.empty
-      else {
-        // the expansion job scans exactly the dict rows whose dfs the
-        // block-fetch gate needs next — seed the df LRU from the same
-        // job instead of running a second dictionary job per cold
-        // fuzzy/regex query
-        val (exp, dfs) = idx.expandAltsDf(missing)
-        termDfs.synchronized {
-          dfs.foreach { case (ft, df) => termDfs.put(ft, df) }
-        }
-        exp
-      }
+      else idx.expandAlts(missing)
     if (fresh.nonEmpty) expansions.synchronized {
       fresh.foreach { case (a, ts) => expansions.put(a, ts) }
     }
@@ -488,7 +419,7 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     // the budget routes to the cluster — nothing index-sized is ever
     // collected to the driver
     if (fts.size > maxQueryTerms) return null
-    val dfs = dfsFor(fts)
+    val dfs = idx.dfsOf(fts)
     if (dfs.valuesIterator.exists(_ > maxDfCached) ||
         dfs.valuesIterator.sum > maxQueryDf) return null
 
