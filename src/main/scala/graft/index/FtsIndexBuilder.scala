@@ -951,7 +951,7 @@ object FtsIndexBuilder {
     * bucket) has already split such a list across partitions by doc range
     * (the north-rule skew treatment).
     */
-  private[index] def encodePartition(
+  private[graft] def encodePartition(
       it: Iterator[(Int, String, String, Long, Long, Long, Array[Byte])],
       blockSize: Int): Iterator[SegmentBlock] =
     new Iterator[SegmentBlock] {

@@ -682,26 +682,9 @@ class FtsIndex(spark: SparkSession, root: String) {
         lineStartCol.cast("int").as("ls"))
       .as[(Long, String, String, String, String, Double, Int)]
 
-    val qText = q.text
-    val caseSens = q.caseSensitive
-    val editDist = q.editDistance
-    val useRegex = q.useRegex
     top.map { case (docId, repo, path, lang, content, score, ls) =>
-      val m =
-        if (useRegex) {
-          val flags = if (caseSens) 0 else java.util.regex.Pattern.CASE_INSENSITIVE
-          Snippets.findRegexMatch(content,
-            java.util.regex.Pattern.compile(qText, flags))
-        } else Snippets.findMatch(content, qText, caseSens, editDist)
-      m match {
-        case Some(mm) =>
-          val e = Snippets.extractSnippet(content, mm.start, snippetLines)
-          SearchResult(docId, repo, path, e.line + ls - 1, e.column, mm.text,
-            e.snippet, e.snippetStartLine + ls - 1, lang, score)
-        case None =>
-          // reference fallback: the document's stored line_start
-          SearchResult(docId, repo, path, ls, 1, qText, "", ls, lang, score)
-      }
+      FtsIndex.hitOf(q, snippetLines, docId, repo, path, lang, content, ls,
+        score)
     }
   }
 
@@ -722,8 +705,8 @@ class FtsIndex(spark: SparkSession, root: String) {
     * top-k lists. Under live deltas the snapshot's dead-doc set
     * ([[deadDocs]], delta-sized) broadcasts into the per-shard scorers so
     * tombstoned docs never occupy heap slots — the daemon keeps its fast
-    * path during watch mode. Falls back to [[search]] for
-    * phrase/fuzzy/regex nodes, when filters are present (a θ-threshold
+    * path during watch mode. Falls back to [[search]] for phrase
+    * nodes (fuzzy/regex expand to terms first), when filters are present (a θ-threshold
     * over the unfiltered stream would not be the filtered top-k), or when
     * the dead set exceeds its driver budget. Returns the same docs and
     * scores as the exhaustive scorer — asserted by the differential
@@ -749,15 +732,11 @@ class FtsIndex(spark: SparkSession, root: String) {
 
     val pred = termPredicate(nodes)
     // dictionary point lookup through the snapshot df cache (zero Spark
-    // jobs when the terms are warm); df = 0 (absent) yields idf 0.0 —
-    // identical to the former collect + getOrElse(ft, 0.0)
+    // jobs when the terms are warm); df = 0 (absent) yields idf 0.0
     val idfs: Map[(String, String), Double] =
       dfsOf(nodes.flatMap(_.alts.collect {
         case TermQ(f, t) => (f, t) }).distinct)
-        .map { case (ft, df) =>
-          ft -> (if (df == 0L) 0.0
-                 else math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5)))
-        }
+        .map { case (ft, df) => ft -> idfOf(nDocs, df) }
     val groupSpec: Seq[Seq[(String, String)]] =
       nodes.map(_.alts.collect { case TermQ(f, t) => (f, t) })
     val avgdl = avgdlByField
@@ -781,46 +760,12 @@ class FtsIndex(spark: SparkSession, root: String) {
 
     val top = perShard.sortBy(s => (-s.score, s.doc)).take(k)
     if (top.isEmpty) return Nil
-    val scores = top.map(s => s.doc -> s.score).toMap
-    val ids = top.map(_.doc)
-    // chunk-granularity docs carry a line_start offset — report
-    // file-absolute lines exactly like search()
-    val chunked = effectiveDocs.columns.contains("line_start")
-    val lsCol =
-      if (chunked) coalesce($"line_start", lit(1)).cast("int") else lit(1)
-    val meta = effectiveDocs
-      .where($"doc_id".isin(ids.toIndexedSeq: _*))
-      .select($"doc_id", $"repo", $"path", $"lang", $"content",
-        lsCol.as("ls")).collect()
-    val text = q.text
-    meta.toSeq.flatMap { r =>
-      val id = r.getLong(0)
-      scores.get(id).map { sc =>
-        val content = r.getString(4)
-        val ls = r.getInt(5)
-        // same extraction as search(): regex patterns must not be searched
-        // as literal text (regex rides WAND after expansion now)
-        val m =
-          if (q.useRegex) {
-            val flags =
-              if (q.caseSensitive) 0
-              else java.util.regex.Pattern.CASE_INSENSITIVE
-            Snippets.findRegexMatch(content,
-              java.util.regex.Pattern.compile(text, flags))
-          } else Snippets.findMatch(content, text, q.caseSensitive,
-            q.editDistance)
-        m match {
-          case Some(mm) =>
-            val e = Snippets.extractSnippet(content, mm.start, snippetLines)
-            SearchResult(id, r.getString(1), r.getString(2), e.line + ls - 1,
-              e.column, mm.text, e.snippet, e.snippetStartLine + ls - 1,
-              r.getString(3), sc)
-          case None =>
-            SearchResult(id, r.getString(1), r.getString(2), ls, 1, text, "",
-              ls, r.getString(3), sc)
-        }
-      }
-    }.sortBy(r => (-r.score, r.doc_id))
+    // top-k rows from the doc store; top is already (score desc, doc asc)
+    val rows = docRowsOf(top.map(_.doc).toSeq, withContent = true)
+    top.toSeq.flatMap { s =>
+      rows.get(s.doc).map(e => hitOf(q, snippetLines, s.doc, e.repo, e.path,
+        e.lang, e.content, e.ls, s.score))
+    }
   }
 }
 
@@ -871,10 +816,10 @@ object FtsIndex {
   final case class Node(alts: Seq[FieldQ]) extends Serializable
 
   /** The BM25 scalar primitives, shared by EVERY scalar scoring path —
-    * cluster [[scoreDoc]], the driver WAND cursors ([[Wand]]), and the
-    * driver phrase scorer ([[FtsQueryCache]]) — so the formula exists in
-    * exactly one place (the columnar [[scoreDocsExact]] twin is pinned to
-    * these by the differential fuzz battery). Arithmetic order is fixed:
+    * cluster [[scoreDoc]] and the WAND cursors ([[Wand]]) of the cluster
+    * and driver paths — so the formula exists in exactly one place (the
+    * columnar [[scoreDocsExact]] twin is pinned to these by the
+    * differential fuzz battery). Arithmetic order is fixed:
     * every caller must stay bit-identical to the DuckDB oracle twins. */
   private[query] def idfOf(n: Long, df: Long): Double =
     if (df == 0) 0.0 else math.log(1.0 + (n - df + 0.5) / (df + 0.5))
@@ -924,6 +869,33 @@ object FtsIndex {
       if (!matched) all = false
     }
     if (all) total else Double.NaN
+  }
+
+  /** One hit row of a scored doc: its first match (a regex match in
+    * regex mode), the snippet around it and FILE-absolute lines (`ls` is a
+    * chunk doc's line_start, 1 for a whole file). Without a match, the
+    * reference's fallback row at the doc's line_start. Shared by every
+    * search path. */
+  private[query] def hitOf(q: FtsQuery, snippetLines: Int, docId: Long,
+                           repo: String, path: String, lang: String,
+                           content: String, ls: Int,
+                           score: Double): SearchResult = {
+    val m =
+      if (q.useRegex) {
+        val flags =
+          if (q.caseSensitive) 0 else java.util.regex.Pattern.CASE_INSENSITIVE
+        Snippets.findRegexMatch(content,
+          java.util.regex.Pattern.compile(q.text, flags))
+      } else Snippets.findMatch(content, q.text, q.caseSensitive,
+        q.editDistance)
+    m match {
+      case Some(mm) =>
+        val e = Snippets.extractSnippet(content, mm.start, snippetLines)
+        SearchResult(docId, repo, path, e.line + ls - 1, e.column, mm.text,
+          e.snippet, e.snippetStartLine + ls - 1, lang, score)
+      case None =>
+        SearchResult(docId, repo, path, ls, 1, q.text, "", ls, lang, score)
+    }
   }
 
   /** Count of phrase alignments: positions where the terms appear at

@@ -29,9 +29,9 @@ import graft.index.FtsSchema._
   *
   * A cold query therefore runs a few plain Spark jobs (df or expansion,
   * blocks, rows) and ZERO SQL executions. Subsequent queries whose state
-  * is hot answer entirely on the driver — block-max WAND (or the exact
-  * phrase scorer) over cached blocks, zero Spark jobs — in single-digit
-  * milliseconds.
+  * is hot answer entirely on the driver — block-max WAND over cached
+  * blocks, a phrase being one more cursor over its aligned blocks, zero
+  * Spark jobs — in single-digit milliseconds.
   *
   * LIVE DELTAS: the cache keeps serving while delta generations exist —
   * the streaming regime, where the reference daemon never drops its warm
@@ -135,77 +135,17 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
   private val contentRows: java.util.LinkedHashMap[Long, String] =
     inheritedState.map(_._3).getOrElse(lru[Long, String](maxDocs))
 
-  /** One term's fully DECODED postings for the phrase scorer: doc ->
-    * (tf, dl, positions), PLUS the sorted doc-id array (the primitive
-    * view of the keys, for candidate merges without Set boxing — derived
-    * once at decode time, so it can never go incoherent with the map).
-    * `weight` is a byte estimate precomputed at decode (per-posting map
-    * overhead + position ints) so LRU eviction never re-walks entries. */
-  private final case class Decoded(
-      postings: Map[Long, (Long, Long, Array[Int])],
-      docsSorted: Array[Long], weight: Long)
-
-  private object Decoded {
-    val empty = Decoded(Map.empty, Array.emptyLongArray, 0L)
-  }
-
-  /** Weight-bounded LRU (field, term) -> [[Decoded]]: hot phrase queries
-    * skip the per-query varint + position decode, which dominates warm
-    * phrase latency when the phrase terms are stopword-grade. Entries are
-    * df-gated by construction (the caller only reaches the phrase path
-    * through the df budgets); the BYTE budget (not an entry count) bounds
-    * worst-case driver retention even when every entry is a near-gate
-    * term. Per-snapshot (delta blocks are merged into the decode). */
-  private val decodedFts =
-    new graft.util.WeightedLru[(String, String), Decoded](256L << 20,
-      _.weight)
-
-  /** One phrase's alignment, columnar: sorted doc ids + parallel phrase-tf
-    * and doc-length arrays — primitive arrays so the hot scoring loop
-    * never boxes a doc id or allocates per candidate. */
-  private final case class PhraseAlign(docs: Array[Long], pf: Array[Int],
-                                       dl: Array[Long])
-
-  /** Weight-bounded LRU (field, terms) -> the phrase's ALIGNMENT (docs
-    * where the terms appear at consecutive positions, with phrase tf and
-    * dl). The position-adjacency sweep over two stopword-grade posting
-    * lists is what dominates hot phrase latency once decodes are cached —
-    * aligning once per (phrase, snapshot) turns repeat phrase queries into
-    * pure per-candidate arithmetic. Per-snapshot, like [[decodedFts]];
-    * byte-bounded (20 B per aligned doc across the three columns). */
+  /** Weight-bounded LRU (field, terms) -> the phrase's posting blocks
+    * ([[Wand.phraseBlocks]]: the docs where the terms sit at consecutive
+    * positions, with phrase tf and dl, encoded like a term's blocks). The
+    * position-adjacency sweep over two stopword-grade posting lists is
+    * what dominates a phrase query — aligning once per (phrase, snapshot)
+    * leaves a repeat phrase query only the kernel's block decodes.
+    * Per-snapshot (delta blocks are aligned in); byte-bounded by the
+    * blocks' encoded size. */
   private val phraseAligns =
-    new graft.util.WeightedLru[(String, List[String]), PhraseAlign](
-      64L << 20, a => a.docs.length * 20L)
-
-  private def mergeUnion(a: Array[Long], b: Array[Long]): Array[Long] = {
-    if (a.isEmpty) return b
-    if (b.isEmpty) return a
-    val out = new Array[Long](a.length + b.length)
-    var i = 0; var j = 0; var k = 0
-    while (i < a.length && j < b.length) {
-      val x = a(i); val y = b(j)
-      if (x < y) { out(k) = x; i += 1 }
-      else if (y < x) { out(k) = y; j += 1 }
-      else { out(k) = x; i += 1; j += 1 }
-      k += 1
-    }
-    while (i < a.length) { out(k) = a(i); i += 1; k += 1 }
-    while (j < b.length) { out(k) = b(j); j += 1; k += 1 }
-    java.util.Arrays.copyOf(out, k)
-  }
-
-  private def mergeIntersect(a: Array[Long], b: Array[Long]): Array[Long] = {
-    if (a.isEmpty || b.isEmpty) return Array.emptyLongArray
-    val out = new Array[Long](math.min(a.length, b.length))
-    var i = 0; var j = 0; var k = 0
-    while (i < a.length && j < b.length) {
-      val x = a(i); val y = b(j)
-      if (x < y) i += 1
-      else if (y < x) j += 1
-      else { out(k) = x; k += 1; i += 1; j += 1 }
-    }
-    java.util.Arrays.copyOf(out, k)
-  }
+    new graft.util.WeightedLru[(String, List[String]), Array[SegmentBlock]](
+      64L << 20, _.iterator.map(_.n_bytes).sum)
 
   /** The snapshot's tombstone filter (delta-sized, loaded once, by ONE
     * Spark job on first use). None = too large for the driver budget. */
@@ -405,7 +345,7 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
       case Some(d) => d
       case None => return null
     }
-    val nodes = expandLocal(buildNodes(q))
+    val nodes = expandLocal(idx.buildNodes(q))
     if (nodes.isEmpty) return Nil
     if (nodes.exists(_.alts.isEmpty)) return Nil // AND: unmatched word
     val fts = nodes.flatMap(_.alts.flatMap {
@@ -427,22 +367,18 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     val snippetLines = if (q.limit == 0) 0 else q.snippetLines
     val blocks = blocksFor(fts)
     val idfs = dfs.map { case (ft, df) => ft -> FtsIndex.idfOf(idx.nDocs, df) }
-    val hasPhrase = nodes.exists(_.alts.exists(_.isInstanceOf[PhraseQ]))
-
-    // full sorted match list for phrase shapes (exhaustive over the small,
-    // df-gated posting sets) — computed ONCE even across overpull rounds;
-    // lazy WAND pulls otherwise
-    lazy val phraseMatches: Seq[Wand.Scored] =
-      scorePhraseLocal(nodes, blocks, idfs, dead)
-    def pullTopK(kk: Int): (Seq[Wand.Scored], Boolean) =
-      if (hasPhrase) {
-        val all = phraseMatches
-        (all.take(kk), all.size <= kk)
-      } else {
-        val groupSpec = nodes.map(_.alts.collect { case TermQ(f, t) => (f, t) })
-        val got = wandLocal(groupSpec, blocks, idfs, kk, dead)
-        (got, got.size < kk)
-      }
+    // one kernel cursor per alternative: a term's blocks and idf, or a
+    // phrase's aligned blocks and the sum of its terms' idfs (the phrase
+    // weight of FtsIndex.scoreDoc)
+    val groups = nodes.map(_.alts.collect {
+      case TermQ(f, t) => (blocks((f, t)), idfs((f, t)), f)
+      case pq @ PhraseQ(f, ts) =>
+        (phraseBlocksFor(pq, blocks), ts.map(t => idfs((f, t))).sum, f)
+    })
+    def pullTopK(kk: Int): (Seq[Wand.Scored], Boolean) = {
+      val got = wandLocal(groups, kk, dead)
+      (got, got.size < kk)
+    }
 
     val top: Seq[Wand.Scored] =
       if (!q.hasFilters) pullTopK(k)._1
@@ -472,51 +408,45 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
       }
     if (top.isEmpty) return Nil
 
+    // top is ordered (score desc, doc asc) by the kernel already
     val (meta, content) = rowsFor(top.map(_.doc))
     top.flatMap { s =>
       meta.get(s.doc).map { case (repo, path, lang, ls, _) =>
-        val c = content.getOrElse(s.doc, "")
-        val m =
-          if (q.useRegex) {
-            val flags =
-              if (q.caseSensitive) 0
-              else java.util.regex.Pattern.CASE_INSENSITIVE
-            Snippets.findRegexMatch(c,
-              java.util.regex.Pattern.compile(q.text, flags))
-          } else Snippets.findMatch(c, q.text, q.caseSensitive, q.editDistance)
-        m match {
-          case Some(mm) =>
-            // chunk docs report FILE-absolute lines, like search()
-            val e = Snippets.extractSnippet(c, mm.start, snippetLines)
-            SearchResult(s.doc, repo, path, e.line + ls - 1, e.column,
-              mm.text, e.snippet, e.snippetStartLine + ls - 1, lang, s.score)
-          case None =>
-            SearchResult(s.doc, repo, path, ls, 1, q.text, "", ls, lang,
-              s.score)
-        }
+        FtsIndex.hitOf(q, snippetLines, s.doc, repo, path, lang,
+          content.getOrElse(s.doc, ""), ls, s.score)
       }
-    }.sortBy(r => (-r.score, r.doc_id))
+    }
+  }
+
+  /** A phrase's aligned blocks, LRU-cached per (phrase, snapshot). */
+  private def phraseBlocksFor(pq: PhraseQ,
+                              blocks: Map[(String, String), Array[SegmentBlock]])
+      : Array[SegmentBlock] = {
+    val key = (pq.field, pq.terms.toList)
+    phraseAligns.synchronized(Option(phraseAligns.get(key))).getOrElse {
+      val out = Wand.phraseBlocks(pq.field,
+        pq.terms.map(t => blocks((pq.field, t))))
+      phraseAligns.synchronized(phraseAligns.put(key, out))
+      out
+    }
   }
 
   /** Driver WAND over cached blocks: shards run sequentially so the θ
     * floor carries across them — the cross-shard pruning the distributed
     * path cannot do (nextDown keeps exact-score ties alive for the doc_id
     * tie-break). */
-  private def wandLocal(groupSpec: Seq[Seq[(String, String)]],
-                        blocks: Map[(String, String), Array[SegmentBlock]],
-                        idfs: Map[(String, String), Double],
+  private def wandLocal(groups: Seq[Seq[(Array[SegmentBlock], Double, String)]],
                         k: Int, dead: Wand.DeadSet): Seq[Wand.Scored] = {
-    val shards = blocks.values.flatten.map(_.shard).toSeq.distinct.sorted
+    val shards = groups.flatten.flatMap(_._1.map(_.shard)).distinct.sorted
     val collected = scala.collection.mutable.ArrayBuffer.empty[Wand.Scored]
     var floor = 0.0
     shards.foreach { sh =>
-      val groups = groupSpec.map(_.flatMap { ft =>
-        val bl = blocks(ft).filter(_.shard == sh)
-        if (bl.isEmpty) None
-        else Some((bl, idfs(ft), idx.avgdl(ft._1)))
+      val shardGroups = groups.map(_.flatMap { case (bl, idf, f) =>
+        val own = bl.filter(_.shard == sh)
+        if (own.isEmpty) None else Some((own, idf, idx.avgdl(f)))
       })
-      if (!groups.exists(_.isEmpty)) {
-        collected ++= Wand.topKShard(groups, k, floor, dead)._1
+      if (!shardGroups.exists(_.isEmpty)) {
+        collected ++= Wand.topKShard(shardGroups, k, floor, dead)._1
         if (collected.size >= k) {
           val kth = collected.sortBy(s => (-s.score, s.doc)).apply(k - 1)
           floor = Math.nextDown(kth.score)
@@ -525,175 +455,6 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     }
     collected.sortBy(s => (-s.score, s.doc)).take(k).toSeq
   }
-
-  /** Exhaustive driver scorer for phrase-bearing queries: decode the
-    * (df-gated) posting lists WITH positions and evaluate candidates with
-    * a HAND-ROLLED cursor loop (per-alt BM25 accumulation over sorted
-    * doc-id cursors) — NOT [[FtsIndex.scoreDoc]]; equivalence with the
-    * cluster scorer is pinned by the differential fuzz battery in
-    * FtsRound5Spec, so a semantics change to scoreDoc (idf sum, NaN
-    * handling, tie-breaks) must be mirrored here BY HAND and will show
-    * up as a fuzz failure if it isn't. Returns ALL (alive) matches
-    * sorted (score desc, doc asc). */
-  private def scorePhraseLocal(nodes: Seq[Node],
-                               blocks: Map[(String, String), Array[SegmentBlock]],
-                               idfs: Map[(String, String), Double],
-                               dead: Wand.DeadSet)
-      : Seq[Wand.Scored] = {
-    import graft.index.Codec
-    // decode each (field, term)'s postings into doc -> (tf, dl, positions)
-    // (or reuse the LRU'd decode — identical by determinism of the codec)
-    val byFt: Map[(String, String), Decoded] =
-      blocks.map { case (ft, bls) =>
-        val cached = decodedFts.synchronized(Option(decodedFts.get(ft)))
-        ft -> cached.getOrElse {
-          val m = scala.collection.mutable.LongMap
-            .empty[(Long, Long, Array[Int])]
-          var posInts = 0L
-          bls.foreach { b =>
-            val docs = Codec.decodeDeltas(b.doc_bytes, b.n)
-            val tfs = Codec.decodeVarints(b.tf_bytes, b.n)
-            val dls = Codec.decodeVarints(b.dl_bytes, b.n)
-            val pr = new Codec.VarIntReader(b.pos_bytes)
-            var i = 0
-            while (i < b.n) {
-              m.put(docs(i), (tfs(i), dls(i), pr.readDeltaList(tfs(i).toInt)))
-              posInts += tfs(i)
-              i += 1
-            }
-          }
-          val sorted = m.keysIterator.toArray
-          java.util.Arrays.sort(sorted)
-          // ~80 B/posting: immutable-map node + key + value tuple + array
-          // headers; positions 4 B each — an estimate, bounded upstream
-          val d = Decoded(m.toMap, sorted, m.size * 80L + posInts * 4L)
-          decodedFts.synchronized(decodedFts.put(ft, d))
-          d
-        }
-      }
-    val avgdl = Map(FieldContent -> idx.avgdl(FieldContent),
-      FieldRaw -> idx.avgdl(FieldRaw), FieldIdent -> idx.avgdl(FieldIdent))
-    // the cluster scoreDoc's own primitive (FtsIndex.bm25Of) — the warm
-    // path can never drift from the cluster path's formula; idfs arrives
-    // precomputed by the caller (searchDriver's one map from the dfs job)
-    def bm25(tf: Double, dl: Long, field: String, idfV: Double): Double =
-      FtsIndex.bm25Of(tf, dl, avgdl(field), idfV)
-
-    // align each distinct phrase ONCE per (phrase, snapshot), LRU'd:
-    // sorted (doc, phrase tf, dl) columns for exactly the docs where the
-    // terms are adjacent — identical to scoreDoc's per-doc phraseFreq by
-    // the codec's determinism, but never recomputed on a hot repeat
-    val phrases = nodes.flatMap(_.alts).collect {
-      case p: PhraseQ => p }.distinct
-    val alignOf: Map[PhraseQ, PhraseAlign] = phrases.map { pq =>
-      val key = (pq.field, pq.terms.toList)
-      val cached = phraseAligns.synchronized(Option(phraseAligns.get(key)))
-      val m = cached.getOrElse {
-        val maps =
-          pq.terms.map(t => byFt.getOrElse((pq.field, t), Decoded.empty).postings)
-        val docsB = Array.newBuilder[Long]
-        val pfB = Array.newBuilder[Int]
-        val dlB = Array.newBuilder[Long]
-        if (maps.nonEmpty && maps.forall(_.nonEmpty)) {
-          val cands = pq.terms
-            .map(t => byFt.getOrElse((pq.field, t), Decoded.empty).docsSorted)
-            .reduce(mergeIntersect) // ascending, so the columns come out sorted
-          cands.foreach { doc =>
-            val pf = FtsIndex.phraseFreq(maps.map(_(doc)._3))
-            if (pf > 0) {
-              docsB += doc; pfB += pf; dlB += maps.head(doc)._2
-            }
-          }
-        }
-        val out = PhraseAlign(docsB.result(), pfB.result(), dlB.result())
-        phraseAligns.synchronized(phraseAligns.put(key, out))
-        out
-      }
-      pq -> m
-    }.toMap
-
-    // candidate docs as ONE sorted primitive array: per node, merge-union
-    // of alt doc arrays; across nodes, merge-intersect — no Set boxing
-    def altDocsArr(a: FieldQ): Array[Long] = a match {
-      case TermQ(f, t) => byFt.getOrElse((f, t), Decoded.empty).docsSorted
-      // aligned docs only — a co-occurring-but-unaligned doc can never
-      // match the phrase alt (scoreDoc returned NaN for those)
-      case pq: PhraseQ => alignOf(pq).docs
-      case _ => Array.emptyLongArray
-    }
-    val candidates = nodes.map(n => n.alts.map(altDocsArr).reduce(mergeUnion))
-      .reduceOption(mergeIntersect).getOrElse(Array.emptyLongArray)
-
-    // per-node alt cursors: candidates ascend, so each phrase alt keeps a
-    // RUNNING POINTER into its sorted alignment columns (one compare per
-    // candidate instead of a binary search); term alts stay map lookups
-    // (rare in phrase-bearing queries)
-    final class PhraseCursor(val al: PhraseAlign, val field: String,
-                             val idfSum: Double) { var p = 0 }
-    val nodePhrase: Array[Array[PhraseCursor]] = nodes.map(_.alts.collect {
-      case pq @ PhraseQ(f, ts) =>
-        new PhraseCursor(alignOf(pq), f, ts.map(t => idfs((f, t))).sum)
-    }.toArray).toArray
-    val nodeTerm: Array[Array[(Map[Long, (Long, Long, Array[Int])], String, Double)]] =
-      nodes.map(_.alts.collect {
-        case TermQ(f, t) =>
-          (byFt.getOrElse((f, t), Decoded.empty).postings, f, idfs((f, t)))
-      }.toArray).toArray
-
-    val out = scala.collection.mutable.ArrayBuffer.empty[Wand.Scored]
-    var ci = 0
-    while (ci < candidates.length) {
-      val doc = candidates(ci)
-      // tombstoned docs never reach the scorer (cursors self-correct on
-      // the next candidate's advance loop)
-      if (!dead.contains(doc)) {
-        var total = 0.0
-        var all = true
-        var ni = 0
-        while (ni < nodePhrase.length) {
-          var matched = false
-          val pcs = nodePhrase(ni)
-          var ai = 0
-          while (ai < pcs.length) {
-            val c = pcs(ai)
-            val ds = c.al.docs
-            while (c.p < ds.length && ds(c.p) < doc) c.p += 1
-            if (c.p < ds.length && ds(c.p) == doc) {
-              total += bm25(c.al.pf(c.p).toDouble, c.al.dl(c.p), c.field,
-                c.idfSum)
-              matched = true
-            }
-            ai += 1
-          }
-          val tas = nodeTerm(ni)
-          ai = 0
-          while (ai < tas.length) {
-            val (m, f, idfV) = tas(ai)
-            m.get(doc).foreach { case (tf, dl, _) =>
-              total += bm25(tf.toDouble, dl, f, idfV)
-              matched = true
-            }
-            ai += 1
-          }
-          if (!matched) all = false
-          ni += 1
-        }
-        if (all) out += Wand.Scored(doc, total)
-      }
-      ci += 1
-    }
-    // allocation-free comparator (a tuple-keyed sortBy boxes every row)
-    val ord = new Ordering[Wand.Scored] {
-      def compare(a: Wand.Scored, b: Wand.Scored): Int = {
-        val c = java.lang.Double.compare(b.score, a.score)
-        if (c != 0) c else java.lang.Long.compare(a.doc, b.doc)
-      }
-    }
-    out.sortInPlace()(ord).toSeq
-  }
-
-  /** Same node construction as the cluster path (shared code). */
-  private def buildNodes(q: FtsQuery): Seq[Node] = idx.buildNodes(q)
 
   // ---- test hooks --------------------------------------------------------
 

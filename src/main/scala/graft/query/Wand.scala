@@ -1,23 +1,25 @@
 package graft.query
 
-import graft.index.Codec
+import graft.index.{Codec, FtsIndexBuilder}
 import graft.index.FtsSchema.SegmentBlock
 
 /** Block-max WAND top-k scorer (Ding & Suel BMW, public algorithm; the
   * basis of Tantivy/Lucene top-k pruning — north-star flagship operator).
   *
-  * Runs INSIDE a `flatMapGroups` per shard (shard doc-id spaces are
-  * disjoint and blocks never cross shards, so each shard is an independent
+  * Runs per shard, INSIDE a `flatMapGroups` on the cluster or over the
+  * warm cache's blocks on the driver (shard doc-id spaces are disjoint
+  * and blocks never cross shards, so each shard is an independent
   * doc-aligned stream); per-shard top-k results merge into a global top-k.
   * Posting blocks are decoded LAZILY: a block whose upper bound
   * idf * bm25(max_tf, min_dl) cannot beat the running threshold θ is
   * skipped without ever being decompressed — that is the whole point of
   * storing block-max metadata next to the compressed postings.
   *
-  * Query shape: AND over word-groups, each group an OR over (field, term)
-  * cursors (content + identifiers), matching the exhaustive scorer's
-  * semantics for exact multi-term queries. Phrase/fuzzy/regex nodes fall
-  * back to the exhaustive path.
+  * Query shape: AND over word-groups, each group an OR over cursors, one
+  * per alternative (content + identifiers), matching the exhaustive
+  * scorer's semantics. A cursor is a term's blocks, or a phrase's aligned
+  * blocks ([[phraseBlocks]]); fuzzy/regex alternatives reach the kernel
+  * already dictionary-expanded into terms.
   */
 object Wand {
 
@@ -158,8 +160,7 @@ object Wand {
       g.map { case (bl, idf, avg) => new TermCursor(bl, idf, avg) }.toArray))
       .toArray
     if (gcs.exists(_.cursors.isEmpty)) return (Nil, WandStats(0, 0))
-    val blocksTotal = gcs.flatMap(_.cursors).map(_ => 0L).sum +
-      groups.flatten.map(_._1.length.toLong).sum
+    val blocksTotal = groups.flatten.map(_._1.length.toLong).sum
 
     // min-heap of (score, doc) keeping the k best under the final result
     // ordering (score desc, doc asc): the worst member — the eviction
@@ -233,5 +234,54 @@ object Wand {
     while (idx >= 0) { out(idx) = heap.poll(); idx -= 1 }
     val decoded = gcs.flatMap(_.cursors).map(_.decodedBlocks.toLong).sum
     (out.toSeq.sortBy(s => (-s.score, s.doc)), WandStats(blocksTotal, decoded))
+  }
+
+  /** Block size of [[phraseBlocks]]: the builder's default. */
+  private val PhraseBlockSize = 128
+
+  /** A phrase's postings as the blocks of one more cursor: the docs where
+    * the terms sit at consecutive positions, each with tf = the phrase
+    * frequency ([[FtsIndex.phraseFreq]]) and dl = the first term's dl —
+    * what [[FtsIndex.scoreDoc]] scores for a phrase. `perTerm` holds each
+    * phrase term's blocks in phrase order, every shard, sorted by (shard,
+    * first_doc). The result is sorted the same way and encoded by the
+    * builder's block encoder one shard at a time, so no block spans a
+    * shard and max_tf / min_dl bound each block as they do for a term. */
+  def phraseBlocks(field: String,
+                   perTerm: Seq[Array[SegmentBlock]]): Array[SegmentBlock] = {
+    if (perTerm.isEmpty || perTerm.exists(_.isEmpty)) return Array.empty
+    val label = perTerm.map(_.head.term).mkString(" ")
+    // one term's postings in a shard: sorted docs, dls, position lists
+    def decode(bls: Array[SegmentBlock])
+        : (Array[Long], Array[Long], Array[Array[Int]]) = {
+      val docs = Array.newBuilder[Long]
+      val dls = Array.newBuilder[Long]
+      val pos = Array.newBuilder[Array[Int]]
+      bls.foreach { b =>
+        docs ++= Codec.decodeDeltas(b.doc_bytes, b.n)
+        dls ++= Codec.decodeVarints(b.dl_bytes, b.n)
+        val pr = new Codec.VarIntReader(b.pos_bytes)
+        Codec.decodeVarints(b.tf_bytes, b.n)
+          .foreach(tf => pos += pr.readDeltaList(tf.toInt))
+      }
+      (docs.result(), dls.result(), pos.result())
+    }
+    val byShard = perTerm.map(_.groupBy(_.shard))
+    val shards = byShard.map(_.keySet).reduce(_ intersect _).toSeq.sorted
+    shards.iterator.flatMap { sh =>
+      val ps = byShard.map(m => decode(m(sh)))
+      val (docs, dls, pos) = ps.head
+      val aligned = docs.indices.iterator.flatMap { i =>
+        val js = ps.tail.map(p => java.util.Arrays.binarySearch(p._1, docs(i)))
+        val pf =
+          if (js.exists(_ < 0)) 0
+          else FtsIndex.phraseFreq(
+            pos(i) +: ps.tail.zip(js).map { case (p, j) => p._3(j) })
+        if (pf == 0) None
+        else Some((sh, field, label, docs(i), dls(i), pf.toLong,
+          Array.emptyByteArray))
+      }
+      FtsIndexBuilder.encodePartition(aligned, PhraseBlockSize)
+    }.toArray
   }
 }

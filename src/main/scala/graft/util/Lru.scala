@@ -13,19 +13,19 @@ object Lru {
 
 /** Access-ordered LRU bounded by total WEIGHT (an approximate byte
   * estimate) instead of entry count — for caches whose entries vary by
-  * orders of magnitude (decoded posting lists, phrase alignments), where
-  * an entry-count cap admits a pathological all-large-entry retention far
+  * orders of magnitude (aligned phrase blocks, ANN cells), where an
+  * entry-count cap admits a pathological all-large-entry retention far
   * past the driver's memory budget. Same usage contract as [[Lru.apply]]:
   * callers synchronize on the instance around get/put. A single entry
   * heavier than the budget is retained alone (the count-LRU cap-1
   * behavior); per-entry size is bounded upstream by the df gates.
   *
   * Every entry is charged a fixed `entryOverhead` floor on top of its
-  * estimated payload: caches of empty results (a df=0 term's decoded
-  * postings, a phrase whose terms are never adjacent) would otherwise
-  * weigh 0 and NEVER trigger eviction, growing the key/entry structures
-  * (boxed tuples, term lists, LinkedHashMap.Entry) without bound under
-  * sustained distinct-query traffic. The floor also covers the real
+  * estimated payload: caches of empty results (a phrase whose terms are
+  * absent or never adjacent) would otherwise weigh 0 and NEVER trigger
+  * eviction, growing the key/entry structures (boxed tuples, term
+  * lists, LinkedHashMap.Entry) without bound under sustained
+  * distinct-query traffic. The floor also covers the real
   * per-entry constant (~3 array headers + case class + entry ≈ 200–300 B)
   * that payload estimates ignore, keeping the true footprint within a
   * small factor of the byte budget. */

@@ -61,6 +61,19 @@ class FtsDifferentialFuzzSpec extends AnyFunSuite {
     base.copy(limit = Seq(0, 3, 10)(rng.nextInt(3)))
   }
 
+  /** Fixed mixed-phrase shapes over a doc's first four words, which sit
+    * at consecutive token positions: phrase + term, a three-term phrase,
+    * two phrases, a language-filtered phrase and a limit=0 phrase. Draws
+    * nothing from `rng`, so the random stream is unchanged. */
+  private def mixedPhrases(d: Fixtures.Doc): Seq[FtsQuery] = {
+    val Seq(a, b, c, e) =
+      d.content.split("[^A-Za-z0-9]+").filter(_.nonEmpty).take(4).toSeq
+    Seq(FtsQuery(s"${a}_$b $c"), FtsQuery(s"${a}_${b}_$c"),
+      FtsQuery(s"${a}_$b ${c}_$e"),
+      FtsQuery(s"${b}_$c", languages = Seq(d.lang)),
+      FtsQuery(s"${a}_$b", limit = 0))
+  }
+
   private def threeWayBattery(buildCfg: FtsIndexBuilder.Config,
                               tag: String): Unit = {
     val docs = (0 until 40).map(randDoc)
@@ -69,10 +82,13 @@ class FtsDifferentialFuzzSpec extends AnyFunSuite {
     val idx = new FtsIndex(spark, root).warm()
     val cache = new graft.query.FtsQueryCache(idx)
 
-    val queries = (0 until 40).map(_ => randQuery())
+    val mixed = mixedPhrases(docs.head)
+    val queries = (0 until 40).map(_ => randQuery()) ++ mixed
     var nonEmpty = 0
     queries.foreach { q =>
       val ex = idx.searchCollected(q).map(r => (r.doc_id, r.score))
+      // doc 0 holds every fixed phrase
+      if (mixed.contains(q)) assert(ex.nonEmpty, s"no match for $q ($tag)")
       val wand = idx.searchWand(q).map(r => (r.doc_id, r.score))
       val cached = cache.search(q).map(r => (r.doc_id, r.score))
       if (ex.nonEmpty) nonEmpty += 1
@@ -124,8 +140,8 @@ class FtsDifferentialFuzzSpec extends AnyFunSuite {
           graft.index.FtsDeltas.fold(spark, root, cfg)
       }
       val idx = rel.index // fresh snapshot over the new generation list
-      (0 until 6).foreach { _ =>
-        val q = randQuery()
+      val queries = (0 until 6).map(_ => randQuery()) ++ mixedPhrases(docs.head)
+      queries.foreach { q =>
         val ex = idx.searchCollected(q).map(r => (r.doc_id, r.score))
         val wand = idx.searchWand(q).map(r => (r.doc_id, r.score))
         val cached = rel.searchCached(q).map(r => (r.doc_id, r.score))

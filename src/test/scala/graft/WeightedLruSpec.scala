@@ -4,9 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.WeightedLru
 
-/** The weight-bounded LRU backing the decoded-postings and
-  * phrase-alignment caches: eviction is by TOTAL WEIGHT (byte estimate),
-  * eldest-accessed first, and the just-inserted entry is never evicted —
+/** The weight-bounded LRU backing the aligned-phrase-block and ANN cell
+  * caches: eviction is by TOTAL WEIGHT (byte estimate), eldest-accessed
+  * first, and the just-inserted entry is never evicted —
   * the property that bounds driver retention under sustained varied
   * phrase traffic where an entry-count cap would not. */
 class WeightedLruSpec extends AnyFunSuite {
