@@ -45,9 +45,17 @@ import graft.index.FtsSchema._
   * tantivy_index_manager.py:642-678) driver-side and re-pull with a larger
   * k until k results survive or the match stream is exhausted — EXACT
   * filter-then-top-k semantics (the reference's own daemon overfetches x3
-  * and accepts recall loss; we grow until exact, and fall back to the
-  * cluster beyond `maxOverpull` candidates — checked up front too, so a
-  * limit=0 filtered query never collects 3x100000 candidate rows).
+  * and accepts recall loss; we grow until exact). The pull is bounded by
+  * the query's candidate bound B, read from the dfs the gates above
+  * already looked up: a match of an AND node matches one of its
+  * alternatives, so B = min over nodes of the summed alternative df (a
+  * phrase counts its rarest term's df). df also counts dead and delta
+  * docs, so B bounds the alive matches from above. The first pull takes
+  * min(max(3k, 30), B) candidates, a pull of B candidates is final, and
+  * the query falls back to the cluster only when more than `maxOverpull`
+  * candidates would reach the driver — so a filtered limit=0 query over a
+  * rare word is served warm, and one over a common word never collects
+  * 3x100000 candidate rows.
   *
   * Concurrency: each LRU has its own monitor, held only around map
   * get/put — never across a Spark job (miss population runs unlocked;
@@ -362,6 +370,13 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     val dfs = idx.dfsOf(fts)
     if (dfs.valuesIterator.exists(_ > maxDfCached) ||
         dfs.valuesIterator.sum > maxQueryDf) return null
+    // the candidate bound B of the class doc
+    val bound: Long = nodes.map(_.alts.map {
+      case TermQ(f, t) => dfs((f, t))
+      case PhraseQ(f, ts) => ts.map(t => dfs((f, t))).min
+      case _ => 0L
+    }.sum).min
+    if (bound == 0) return Nil
 
     val k = if (q.limit == 0) 100000 else q.limit
     val snippetLines = if (q.limit == 0) 0 else q.snippetLines
@@ -375,9 +390,10 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
       case pq @ PhraseQ(f, ts) =>
         (phraseBlocksFor(pq, blocks), ts.map(t => idfs((f, t))).sum, f)
     })
+    /** The top kk candidates, and whether they are every match. */
     def pullTopK(kk: Int): (Seq[Wand.Scored], Boolean) = {
       val got = wandLocal(groups, kk, dead)
-      (got, got.size < kk)
+      (got, got.size < kk || kk >= bound)
     }
 
     val top: Seq[Wand.Scored] =
@@ -385,12 +401,13 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
       else {
         // the documented contract: beyond maxOverpull candidates the query
         // belongs on the cluster — checked BEFORE the first pull too, so a
-        // filtered limit=0 query (k=100000) never collects 3k candidates'
-        // metadata through the driver (ADVICE r03 #3)
-        if (math.max(3 * k, 30) > maxOverpull) return null
+        // filtered limit=0 query (k=100000) over a common word never
+        // collects its candidates' metadata through the driver, while one
+        // whose bound B is small is answered here in one pull
+        var kk = math.min(math.max(3 * k, 30).toLong, bound).toInt
+        if (kk > maxOverpull) return null
         val pathMatch = PathGlob.anyMatcher(q.pathFilters)
         val pathExcl = PathGlob.anyMatcher(q.excludePathFilters)
-        var kk = math.max(3 * k, 30)
         var out: Option[Seq[Wand.Scored]] = None
         while (out.isEmpty) {
           val (cands, exhausted) = pullTopK(kk)
@@ -402,7 +419,7 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
           }
           if (kept.size >= k || exhausted) out = Some(kept.take(k))
           else if (kk >= maxOverpull) return null
-          else kk *= 4
+          else kk = math.min(math.min(4L * kk, bound), maxOverpull.toLong).toInt
         }
         out.get
       }

@@ -2,6 +2,7 @@ package graft.query
 
 import scala.reflect.ClassTag
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.storage.StorageLevel
@@ -45,9 +46,10 @@ private[query] final class SnapshotStore[P](name: String,
     * `f` must capture plain data only (it ships to the executors). */
   def lookup[R: ClassTag](f: P => Array[R]): Array[R] = {
     val r = rdd
-    r.sparkContext.runJob(r,
-      (it: Iterator[P]) => it.flatMap(p => f(p).iterator).toArray)
-      .flatten
+    val got = new Array[Array[R]](r.getNumPartitions)
+    r.sparkContext.runJob(r, new SnapshotStore.Probe(f),
+      0 until got.length, (i: Int, part: Array[R]) => got(i) = part)
+    got.flatten
   }
 
   /** Unpersist the store if it was ever built. */
@@ -58,6 +60,17 @@ private[query] final class SnapshotStore[P](name: String,
 }
 
 private[query] object SnapshotStore {
+
+  /** The task of [[SnapshotStore.lookup]]. A named class, not a lambda:
+    * `SparkContext.clean` returns at once for it, where for a lambda it
+    * reads the capturing class's bytecode on every job — and the
+    * `Iterator => U` overload of `runJob` wraps its function in a lambda
+    * captured by `SparkContext` itself (a 200 KB class). */
+  private final class Probe[P, R: ClassTag](f: P => Array[R])
+      extends ((TaskContext, Iterator[P]) => Array[R]) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[P]): Array[R] =
+      it.flatMap(p => f(p).iterator).toArray
+  }
 
   /** One field's dictionary slice, sorted by term (binary-searched for
     * df; scanned for fuzzy/regex expansion). `cmasks(i)` is term i's

@@ -67,7 +67,8 @@ class FtsQueryCacheSpec extends AnyFunSuite {
       "case" -> FtsQuery("Configuration", caseSensitive = true, limit = 5),
       "lang" -> FtsQuery("def", languages = Seq("python"), limit = 5),
       "path" -> FtsQuery("def", pathFilters = Seq("src/*"), limit = 5),
-      "limit=0" -> FtsQuery("password", limit = 0))
+      "limit=0" -> FtsQuery("password", limit = 0),
+      "routed" -> FtsQuery("def", limit = 0, languages = Seq("python")))
     // the expected answers come from a separate snapshot, so the served
     // one's df cache starts cold too
     val ref = new FtsIndex(spark, root)
@@ -99,6 +100,41 @@ class FtsQueryCacheSpec extends AnyFunSuite {
     idx.cool()
     assert((storeIds intersect mine).isEmpty,
       "cool() must unpersist every store")
+  }
+
+  test("a filtered query whose df bound exceeds maxOverpull goes to the " +
+       "cluster and equals the exhaustive path") {
+    val idx = new FtsIndex(spark,
+      freshIndex(Fixtures.corpusA ++ Fixtures.corpusB))
+    val cache = new FtsQueryCache(idx, maxOverpull = 2)
+    val q = FtsQuery("def", limit = 1, languages = Seq("python"))
+    assert(idx.dict.where("field = 'content' AND term = 'def'")
+      .select("df").head.getLong(0) > 2)
+    assertSame(cache.search(q), idx.searchCollected(q), "the routed query")
+    assert(cache.stats.clusterRouted === 1 && cache.stats.warmServed === 0)
+  }
+
+  test("a filtered query whose every candidate passes (a pull of exactly " +
+       "the df bound) is served warm and equals the exhaustive path") {
+    // the word is in the content of three docs and an identifier of three
+    // others: the bound is the sum of the two fields' dfs, and every
+    // posting is a distinct match that passes the filter
+    val docs = (1 to 6).map { i =>
+      val inContent = i <= 3
+      Fixtures.Doc("test_repo", s"src/qz_$i.py", i.toString * 40, "python",
+        if (inContent) s"def f$i(): return zqboundword + $i"
+        else s"def f$i(): return $i",
+        if (inContent) Nil else Seq("zqboundword"))
+    }
+    val idx = new FtsIndex(spark, freshIndex(docs ++ Fixtures.corpusA))
+    val cache = new FtsQueryCache(idx)
+    for (q <- Seq(FtsQuery("zqboundword", limit = 0, languages = Seq("python")),
+                  FtsQuery("zqboundword", limit = 10, pathFilters = Seq("src/*")))) {
+      val ex = idx.searchCollected(q)
+      assert(ex.size === 6)
+      assertSame(cache.search(q), ex, q.toString)
+    }
+    assert(cache.stats.clusterRouted === 0 && cache.stats.warmServed === 2)
   }
 
   test("a base-part refetch never empties a cached delta part " +

@@ -9,7 +9,8 @@ import graft.query.{FtsIndex, FtsQuery, FtsQueryCache}
 /** Round-4: exact score ties at the k boundary resolve identically on all
   * three paths, the warm cache + WAND keep serving under LIVE delta
   * generations (the streaming regime), path filters stay UDF-free, the
-  * filtered-overpull budget is honored up front, wide expansions don't
+  * filtered-overpull budget is honored up front (a small df bound keeps
+  * filtered limit=0 warm), wide expansions don't
   * poison the expansion LRU, the cache is safe under concurrent queries,
   * and generation publish is rename-race-safe. */
 class FtsRound4Spec extends AnyFunSuite {
@@ -175,8 +176,8 @@ class FtsRound4Spec extends AnyFunSuite {
       "hot line-filtered cached queries must run zero Spark jobs")
   }
 
-  test("filtered limit=0 routes to the cluster before any overpull " +
-       "(maxOverpull contract honored up front)") {
+  test("filtered limit=0 is served warm when its df bound fits the " +
+       "overpull budget (maxOverpull contract honored up front)") {
     val root = freshIndex(Fixtures.corpusA ++ Fixtures.corpusB)
     val idx = new FtsIndex(spark, root).warm()
     val cache = new FtsQueryCache(idx)
@@ -185,6 +186,7 @@ class FtsRound4Spec extends AnyFunSuite {
     val ex = idx.searchCollected(q).map(keyOf)
     assert(cached === ex)
     assert(cached.nonEmpty)
+    assert(cache.stats.clusterRouted === 0)
   }
 
   test("a query with more dynamic alternatives than the expansion LRU " +
