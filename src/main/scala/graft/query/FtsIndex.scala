@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Tokenizer
-import graft.functions.{Distance, PathGlob}
+import graft.functions.PathGlob
 import graft.index.{FtsIndexBuilder, IndexBuilder}
 import graft.index.FtsSchema._
 
@@ -190,43 +190,28 @@ class FtsIndex(spark: SparkSession, root: String) {
     * alive-semi-join handles any size. */
   private val maxDeadDocs = 1 << 22
 
-  /** Key-addressed stores over the snapshot's dictionary, segments and
-    * alive docs ([[SnapshotStore]]): the warm cache's misses, the df
-    * lookup and fuzzy/regex expansion run as one plain `runJob` each over
-    * these, never as a Catalyst plan. The exhaustive and cluster-WAND
-    * scorers keep reading the relations above. */
-  private val dictStore = new SnapshotStore(
-    "graft-dict-store", () => SnapshotStore.dictParts(dict))
-  private val segmentStore = new SnapshotStore(
+  /** Key-addressed stores over the snapshot's segments and alive docs
+    * ([[SnapshotStore]]): the warm cache's block and row misses run as
+    * one plain `runJob` each over these, never as a Catalyst plan. The
+    * exhaustive and cluster-WAND scorers keep reading the relations
+    * above. */
+  private[query] val segmentStore = new SnapshotStore(
     "graft-segment-store", () => SnapshotStore.segmentParts(segments))
-  private val docStore = new SnapshotStore(
+  private[query] val docStore = new SnapshotStore(
     "graft-doc-store", () => SnapshotStore.docParts(effectiveDocs))
 
-  /** Driver-side LRU (field, term) -> df over this SNAPSHOT's dictionary
-    * (immutable once loaded — delta generations produce a new snapshot):
-    * the ONE df source of every query path, the warm cache included.
-    * Keeping it warm removes one small-but-latency-bearing Spark job from
-    * every repeated query, the daemon regime the reference serves from. A
-    * miss is one `runJob` over the dictionary store for ALL missing
-    * terms. */
-  private val dfCache = graft.util.Lru[(String, String), Long](1 << 16)
+  /** The snapshot's term dictionary on the driver ([[TermDict]]; immutable
+    * once loaded — delta generations produce a new snapshot): one collect
+    * of the dictionary relation, in [[warm]] or on first use. */
+  private lazy val termDict: TermDict = TermDict.collect(dict)
 
+  /** df per (field, term), 0 for a term the dictionary lacks: the ONE df
+    * source of every query path, the warm cache included. A binary search
+    * per dictionary run on the driver — no Spark job. */
   private[query] def dfsOf(fts: Seq[(String, String)])
       : Map[(String, String), Long] = {
-    val hits = dfCache.synchronized {
-      fts.flatMap(ft => Option(dfCache.get(ft)).map(ft -> _.toLong)).toMap
-    }
-    val missing = fts.filterNot(hits.contains)
-    if (missing.isEmpty) return hits
-    val got = dictStore.lookup(SnapshotStore.dfLookup(missing.toArray))
-      .map(r => (r._1, r._2) -> r._3).toMap
-    // df = 0 marks "not in the dictionary" (real entries always have
-    // df >= 1) — cached too, so repeated misses don't re-run the job
-    val withZeros = missing.map(ft => ft -> got.getOrElse(ft, 0L)).toMap
-    dfCache.synchronized {
-      withZeros.foreach { case (ft, df) => dfCache.put(ft, df) }
-    }
-    hits ++ withZeros
+    val d = termDict
+    fts.iterator.map(ft => ft -> d.df(ft._1, ft._2)).toMap
   }
 
   /** Every posting block of the given (field, term)s, base and delta,
@@ -285,19 +270,21 @@ class FtsIndex(spark: SparkSession, root: String) {
   }
 
   /** Cache the index relations across queries (the reference daemon's warm
-    * index cache analog, server/cache/fts_index_cache.py) and build the
-    * key-addressed stores over them. Each store's build job reads its
-    * relation through the cache just registered, so ONE job per relation
-    * both fills the columnar cache and builds the store. */
+    * index cache analog, server/cache/fts_index_cache.py), build the
+    * key-addressed stores over them and collect the term dictionary. Each
+    * build job reads its relation through the cache just registered, so
+    * ONE job per relation both fills the columnar cache and builds the
+    * store or the driver dictionary. */
   def warm(): this.type = {
     docs.persist(); segments.persist(); dict.persist()
-    docStore.materialize(); segmentStore.materialize(); dictStore.materialize()
+    docStore.materialize(); segmentStore.materialize(); termDict
     this
   }
 
   /** Release relations persisted by [[warm]] (called on reload swap), the
     * key-addressed stores, plus the snapshot's dead-set broadcast if one
-    * was built.
+    * was built. The driver dictionary stays: it is plain driver heap, so a
+    * racing reader keeps its df lookups job-free.
     *
     * The broadcast is UNPERSISTED, never destroyed: [[ReloadingFtsIndex]]
     * swaps and cools the stale snapshot while unsynchronized readers may
@@ -307,7 +294,7 @@ class FtsIndex(spark: SparkSession, root: String) {
     * when the snapshot is GC'd (ADVICE r04 #1). */
   def cool(): this.type = {
     docs.unpersist(); segments.unpersist(); dict.unpersist()
-    docStore.release(); segmentStore.release(); dictStore.release()
+    docStore.release(); segmentStore.release()
     val bc = deadBcCache
     if (bc != null) bc.foreach(_.unpersist())
     this
@@ -367,8 +354,8 @@ class FtsIndex(spark: SparkSession, root: String) {
   /** Expand fuzzy/regex alternatives over the term DICTIONARY into concrete
     * term sets — the Spark analog of the reference's automaton walk over
     * Tantivy's FST term dictionary (tantivy_index_manager.py:347-374 fuzzy,
-    * :492-505 regex). One dictionary-store lookup covers every dynamic
-    * alternative of the query; matched terms replace the alternative as
+    * :492-505 regex), walked on the driver like the reference's in-process
+    * one; matched terms replace the alternative as
     * plain [[TermQ]]s, so everything downstream (codegen exact scorer,
     * block-max WAND, the driver cache) sees only exact terms, and the
     * SEGMENTS scan is pruned by a pushable isin predicate instead of
@@ -389,33 +376,14 @@ class FtsIndex(spark: SparkSession, root: String) {
     }
   }
 
-  /** Dictionary expansion of dynamic (fuzzy/regex) alternatives: one
-    * `runJob` over the dictionary store for all of them
-    * ([[SnapshotStore.expandLookup]]: length band and character-class
-    * bitmap prefilters before the bounded Damerau distance), then an exact
-    * driver-side re-check to attribute the matched terms to each
-    * alternative. The lookup returns exactly the dictionary rows whose dfs
-    * every downstream scorer needs next, so their dfs seed the snapshot
-    * df cache here — no follow-up df lookup on a fuzzy/regex query.
-    * Returned term lists are sorted for determinism. */
+  /** Dictionary expansion of dynamic (fuzzy/regex) alternatives: one scan
+    * of the driver dictionary per alternative ([[TermDict.expand]]: length
+    * band and character-class bitmap prefilters before the bounded
+    * Damerau distance), no Spark job. Returned term lists are sorted for
+    * determinism; their dfs are [[dfsOf]] lookups like any other term's. */
   private[query] def expandAlts(dyn: Seq[FieldQ]): Map[FieldQ, Seq[TermQ]] = {
-    val rows = dictStore.lookup(SnapshotStore.expandLookup(dyn.toArray))
-    dfCache.synchronized {
-      rows.foreach(r => dfCache.put((r._1, r._2), r._3))
-    }
-    dyn.map { a =>
-      a -> (a match {
-        case FuzzyQ(f, w, d) =>
-          rows.iterator.filter(r => r._1 == f &&
-              Distance.damerauBounded(r._2, w, d) <= d)
-            .map(r => TermQ(f, r._2)).toSeq.sortBy(_.term)
-        case RegexQ(f, pat) =>
-          val re = java.util.regex.Pattern.compile(s"^(?:$pat)$$")
-          rows.iterator.filter(r => r._1 == f && re.matcher(r._2).matches())
-            .map(r => TermQ(f, r._2)).toSeq.sortBy(_.term)
-        case _ => Nil
-      })
-    }.toMap
+    val d = termDict
+    dyn.map(a => a -> d.expand(a)).toMap
   }
 
   /** Predicate over (field, term) used to prune both the segment scan and
@@ -731,8 +699,8 @@ class FtsIndex(spark: SparkSession, root: String) {
     val snippetLines = if (q.limit == 0) 0 else q.snippetLines
 
     val pred = termPredicate(nodes)
-    // dictionary point lookup through the snapshot df cache (zero Spark
-    // jobs when the terms are warm); df = 0 (absent) yields idf 0.0
+    // dictionary point lookup on the driver (zero Spark jobs); df = 0
+    // (absent) yields idf 0.0
     val idfs: Map[(String, String), Double] =
       dfsOf(nodes.flatMap(_.alts.collect {
         case TermQ(f, t) => (f, t) }).distinct)

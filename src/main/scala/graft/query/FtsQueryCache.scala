@@ -15,9 +15,9 @@ import graft.index.FtsSchema._
   *   - posting blocks per (field, term) — fetched on first use by one
   *     `runJob` over the snapshot's key-addressed segment store
   *     ([[SnapshotStore]]): a hash lookup per partition, no query plan;
-  *   - df per (field, term), read through the snapshot's df cache
-  *     ([[FtsIndex.dfsOf]], the one df source; a miss is one `runJob` over
-  *     the dictionary store) and consulted BEFORE any block fetch: a term
+  *   - df per (field, term), read from the snapshot's driver dictionary
+  *     ([[FtsIndex.dfsOf]], the one df source; a binary search, no Spark
+  *     job) and consulted BEFORE any block fetch: a term
   *     whose posting list exceeds `maxDfCached` (stopword-grade, df ~ N)
   *     is never collected to the driver; the whole query routes to the
   *     cluster WAND path instead. This is what makes the cache safe
@@ -27,8 +27,9 @@ import graft.index.FtsSchema._
   *   - doc metadata (repo/path/lang) and doc content rows by doc_id, fetched
   *     from the doc store by the same kind of `runJob`.
   *
-  * A cold query therefore runs a few plain Spark jobs (df or expansion,
-  * blocks, rows) and ZERO SQL executions. Subsequent queries whose state
+  * A cold query therefore runs at most two plain Spark jobs (blocks, then
+  * rows) and ZERO SQL executions; df and fuzzy/regex expansion never
+  * leave the driver. Subsequent queries whose state
   * is hot answer entirely on the driver — block-max WAND over cached
   * blocks, a phrase being one more cursor over its aligned blocks, zero
   * Spark jobs — in single-digit milliseconds.
@@ -270,11 +271,11 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     (metaHits ++ gotMeta, contentHits ++ gotContent)
   }
 
-  /** Expand fuzzy/regex alternatives, LRU-cached; one dictionary-store
-    * lookup on miss (via [[FtsIndex.expandAlts]] — the same expansion the
-    * cluster path runs, so results are identical by construction, and it
-    * seeds the snapshot df cache the block-fetch gate reads next). The
-    * per-call map is built from LRU hits + the expandAlts return value
+  /** Expand fuzzy/regex alternatives, LRU-cached; one scan of the driver
+    * dictionary per missing alternative (via [[FtsIndex.expandAlts]] — the
+    * same expansion the cluster path runs, so results are identical by
+    * construction; the LRU spares a repeated regex its milliseconds-long
+    * scan). The per-call map is built from LRU hits + the expandAlts return value
     * directly — the LRU is only a cache, never the source of truth (a
     * query with more alternatives than the LRU capacity must not read
     * back its own evictions — ADVICE r03 #4). */

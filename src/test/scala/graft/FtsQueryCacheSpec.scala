@@ -70,20 +70,19 @@ class FtsQueryCacheSpec extends AnyFunSuite {
       "limit=0" -> FtsQuery("password", limit = 0),
       "routed" -> FtsQuery("def", limit = 0, languages = Seq("python")))
     // the expected answers come from a separate snapshot, so the served
-    // one's df cache starts cold too
+    // one's stores start cold too
     val ref = new FtsIndex(spark, root)
     val expected = shapes.map { case (n, q) => n -> ref.searchCollected(q) }
     expected.foreach { case (n, ex) => assert(ex.nonEmpty, s"$n matches") }
 
     val sc = spark.sparkContext
-    val stores = Set("graft-dict-store", "graft-segment-store",
-      "graft-doc-store")
+    val stores = Set("graft-segment-store", "graft-doc-store")
     def storeIds = sc.getPersistentRDDs.values
       .filter(r => stores(r.name)).map(_.id).toSet
     val othersIds = storeIds // the reference snapshot's lazily built ones
     val idx = new FtsIndex(spark, root).warm()
     val mine = storeIds -- othersIds
-    assert(mine.size === 3, "warm() builds the three stores")
+    assert(mine.size === 2, "warm() builds the two stores")
     val sql = new SqlExecutions
     val got = shapes.map { case (n, q) =>
       val cache = new FtsQueryCache(idx)
