@@ -123,9 +123,9 @@ object FtsCli {
       }
       parse(rest)
       val idx = new FtsIndex(spark, indexDir).warm()
-      // searchWand takes the FULL query and falls back to the exhaustive
-      // scorer for shapes it can't prune (fuzzy/regex/phrase, filters,
-      // deltas) — no flag is silently dropped
+      // searchWand takes the FULL query — every shape and filter runs the
+      // WAND kernel on the cluster, and only an oversized dead set or
+      // over-pull falls back to the exhaustive scorer; no flag is dropped
       val results =
         if (wand) idx.searchWand(q)
         else idx.searchCollected(q)

@@ -199,7 +199,6 @@ object FtsIndexBuilder {
     * the scheduler interleaves their jobs (wall-clock ~ max(group)). */
   def stageShards(spark: SparkSession, vDir: String, cfg: Config,
                   subset: Option[Seq[Int]]): (Seq[Int], Seq[Int]) = {
-    val docs = spark.read.parquet(s"$vDir/docs")
     val done = doneShards(spark, vDir)
     val candidates = subset.getOrElse(0 until cfg.nShards).toSeq
     val (skipped, todo) = candidates.partition(done.contains)
@@ -220,22 +219,20 @@ object FtsIndexBuilder {
       // ~15% of the stage wall idle). Floor the split count at 4x the
       // available cores so the heaviest stage of the build packs into
       // even waves; derived from defaultParallelism, not a host
-      // constant, and restored after the stage so query scans keep
-      // their task counts.
-      val minPartKey = "spark.sql.files.minPartitionNum"
-      val prevMinPart =
-        try spark.conf.getOption(minPartKey) catch { case _: Exception => None }
-      spark.conf.set(minPartKey,
-        (4 * spark.sparkContext.defaultParallelism).toString)
-      try {
-        phase("shard-groups")(Await.result(
-          Future.sequence(groups.map { g =>
-            Future(buildShardGroup(spark, docs, vDir, g.min, g, cfg))
-          }), Duration.Inf))
-      } finally prevMinPart match {
-        case Some(v) => spark.conf.set(minPartKey, v)
-        case None => spark.conf.unset(minPartKey)
+      // constant. The floor lives in a session of its own that carries
+      // the caller's runtime conf, so the caller's session — and every
+      // query running on it meanwhile — never sees it.
+      val shardSpark = spark.newSession()
+      spark.conf.getAll.foreach { case (k, v) =>
+        if (shardSpark.conf.isModifiable(k)) shardSpark.conf.set(k, v)
       }
+      shardSpark.conf.set("spark.sql.files.minPartitionNum",
+        (4 * spark.sparkContext.defaultParallelism).toString)
+      val docs = shardSpark.read.parquet(s"$vDir/docs")
+      phase("shard-groups")(Await.result(
+        Future.sequence(groups.map { g =>
+          Future(buildShardGroup(shardSpark, docs, vDir, g.min, g, cfg))
+        }), Duration.Inf))
     }
     (todo, skipped)
   }

@@ -151,19 +151,12 @@ class AnnIndex(emb: DataFrame, val nCells: Int = 64, val nProbe: Int = 8,
         // partitions (partition i == cell i) — no per-query Catalyst
         // analysis/codegen (measured ~50-80 ms per query of pure plan
         // overhead on the DataFrame path), same simOf scoring, same NaN
-        // drop, same minScore floor, same (sim desc, vec_id asc) order
+        // drop, same minScore floor, same (sim desc, vec_id asc) order;
+        // each partition ships at most k pairs, merged on the driver
         val floor = minScore.getOrElse(Double.NegativeInfinity)
         val chunks = rdd.sparkContext.runJob(rdd,
-          (it: Iterator[(Int, (Long, Array[Float]))]) => {
-            val buf = scala.collection.mutable.ArrayBuffer
-              .empty[(Long, Double)]
-            it.foreach { case (_, (id, e)) =>
-              val sim = simOf(q, e)
-              if (!java.lang.Double.isNaN(sim) && sim >= floor)
-                buf += ((id, sim))
-            }
-            buf.toArray
-          }, cells)
+          (it: Iterator[(Int, (Long, Array[Float]))]) =>
+            AnnIndex.cellTopK(it.map(_._2), q, floor, k), cells)
         chunks.iterator.flatten.toArray.toSeq
           .sortBy { case (id, sim) => (-sim, id) }.take(k)
       case None =>
@@ -391,6 +384,32 @@ object AnnIndex {
     (new AnnIndex(assigned, nCells = cents.length, nProbe = probe,
       maxCachedCells = maxCachedCells, loaded = Some((cents, assigned))),
       version)
+  }
+
+  /** One cell's top-k (vec_id, sim) pairs at or above `floor`, NaN
+    * similarities dropped, in (sim desc, vec_id asc) order: a size-k heap
+    * whose head is the worst kept pair (lowest sim, then highest id), so
+    * a skewed cell ships k pairs, not every pair above the floor. */
+  private[graft] def cellTopK(it: Iterator[(Long, Array[Float])],
+                              q: Array[Double], floor: Double,
+                              k: Int): Array[(Long, Double)] = {
+    if (k <= 0) return Array.empty
+    val worstFirst: Ordering[(Long, Double)] = (a, b) => {
+      val c = java.lang.Double.compare(a._2, b._2)
+      if (c != 0) c else java.lang.Long.compare(b._1, a._1)
+    }
+    val heap = new java.util.PriorityQueue[(Long, Double)](k, worstFirst)
+    it.foreach { case (id, e) =>
+      val sim = simOf(q, e)
+      if (!java.lang.Double.isNaN(sim) && sim >= floor) {
+        if (heap.size < k) heap.add((id, sim))
+        else if (worstFirst.compare((id, sim), heap.peek()) > 0) {
+          heap.poll(); heap.add((id, sim))
+        }
+      }
+    }
+    heap.toArray(Array.empty[(Long, Double)])
+      .sortBy { case (id, sim) => (-sim, id) }
   }
 
   /** Rounded query-vs-stored similarity — the ONE definition both serving

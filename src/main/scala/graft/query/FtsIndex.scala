@@ -232,51 +232,46 @@ class FtsIndex(spark: SparkSession, root: String) {
     docStore.lookup(SnapshotStore.docLookup(ids.distinct.toArray,
       withContent)).toMap
 
-  /** Sorted doc_ids whose postings survive in the segments but which a
-    * newer tombstone has killed — the alive filter that lets block-max
-    * WAND and the driver cache keep serving DURING watch mode (the
-    * reference daemon serves from its warm index throughout,
-    * daemon/cache.py:82-383). Delta-bounded: one id per superseded
-    * document, and the streaming auto-fold keeps live generations O(1).
-    * None when the set exceeds `maxDeadDocs`. Computed once per snapshot:
-    * one column-pruned scan of (doc_id, repo, path, gen) against the
-    * broadcast tombstone key set — never the content column. */
-  lazy val deadDocs: Option[Array[Long]] = tombstones match {
-    case None => Some(Array.emptyLongArray)
+  /** The doc_ids whose postings survive in the segments but which a
+    * newer tombstone has killed — the alive filter that lets the WAND
+    * pipeline keep serving DURING watch mode (the reference daemon serves
+    * from its warm index throughout, daemon/cache.py:82-383). Delta-bounded:
+    * one id per superseded document, and the streaming auto-fold keeps
+    * live generations O(1). None when the set exceeds `maxDeadDocs`.
+    * Computed once per snapshot and shared by every query: one
+    * column-pruned scan of (doc_id, repo, path, gen) against the broadcast
+    * tombstone key set — never the content column. */
+  lazy val deadSet: Option[Wand.DeadSet] = tombstones match {
+    case None => Some(Wand.DeadSet.empty)
     case Some(t) =>
       val tmax = t.groupBy("repo", "path").agg(max("gen").as("tgen"))
       val ids = docs.join(broadcast(tmax), Seq("repo", "path"))
         .where(col("gen") < col("tgen"))
         .select("doc_id").limit(maxDeadDocs + 1)
         .collect().map(_.getLong(0))
-      if (ids.length > maxDeadDocs) None
-      else { java.util.Arrays.sort(ids); Some(ids) }
+      if (ids.length > maxDeadDocs) None else Some(Wand.DeadSet(ids))
   }
 
   /** The dead set as a cluster broadcast — built ONCE per snapshot (the
     * set is immutable; re-broadcasting per query would pay torrent
     * distribution every time and leak blocks until the ContextCleaner
     * runs) and unpersisted by [[cool]] on snapshot retirement. */
-  @volatile private var deadBcCache
-      : Option[org.apache.spark.broadcast.Broadcast[Wand.DeadSet]] = null
-  private def deadBc
+  @volatile private var deadBcBuilt = false
+  private lazy val deadBc
       : Option[org.apache.spark.broadcast.Broadcast[Wand.DeadSet]] = {
-    if (deadBcCache == null) synchronized {
-      if (deadBcCache == null)
-        deadBcCache = deadDocs.filter(_.nonEmpty)
-          .map(ids => spark.sparkContext.broadcast(new Wand.DeadSet(ids)))
-    }
-    deadBcCache
+    deadBcBuilt = true
+    deadSet.filter(!_.isEmpty).map(spark.sparkContext.broadcast(_))
   }
 
-  /** Cache the index relations across queries (the reference daemon's warm
-    * index cache analog, server/cache/fts_index_cache.py), build the
-    * key-addressed stores over them and collect the term dictionary. Each
-    * build job reads its relation through the cache just registered, so
-    * ONE job per relation both fills the columnar cache and builds the
-    * store or the driver dictionary. */
+  /** Cache the docs and segments relations across queries (the reference
+    * daemon's warm index cache analog, server/cache/fts_index_cache.py),
+    * build the key-addressed stores over them and collect the term
+    * dictionary. Each store build reads its relation through the cache
+    * just registered, so ONE job per relation both fills the columnar
+    * cache and builds the store. The dictionary relation is not cached:
+    * serving reads only the driver dictionary, which one job collects. */
   def warm(): this.type = {
-    docs.persist(); segments.persist(); dict.persist()
+    docs.persist(); segments.persist()
     docStore.materialize(); segmentStore.materialize(); termDict
     this
   }
@@ -293,10 +288,9 @@ class FtsIndex(spark: SparkSession, root: String) {
     * re-broadcasts on next use and is reclaimed by the ContextCleaner
     * when the snapshot is GC'd (ADVICE r04 #1). */
   def cool(): this.type = {
-    docs.unpersist(); segments.unpersist(); dict.unpersist()
+    docs.unpersist(); segments.unpersist()
     docStore.release(); segmentStore.release()
-    val bc = deadBcCache
-    if (bc != null) bc.foreach(_.unpersist())
+    if (deadBcBuilt) deadBc.foreach(_.unpersist())
     this
   }
 
@@ -359,14 +353,17 @@ class FtsIndex(spark: SparkSession, root: String) {
     * plain [[TermQ]]s, so everything downstream (codegen exact scorer,
     * block-max WAND, the driver cache) sees only exact terms, and the
     * SEGMENTS scan is pruned by a pushable isin predicate instead of
-    * running a UDF over every block. */
-  private[query] def expandNodes(nodes: Seq[Node]): Seq[Node] = {
+    * running a UDF over every block. `expand` is [[expandAlts]] or the
+    * warm cache's LRU in front of it. */
+  private[query] def expandNodes(nodes: Seq[Node],
+      expand: Seq[FieldQ] => Map[FieldQ, Seq[TermQ]] = expandAlts)
+      : Seq[Node] = {
     val dyn = nodes.flatMap(_.alts).collect {
       case f: FuzzyQ => f: FieldQ
       case r: RegexQ => r: FieldQ
     }.distinct
     if (dyn.isEmpty) return nodes
-    val expanded = expandAlts(dyn)
+    val expanded = expand(dyn)
     nodes.map { nd =>
       Node(nd.alts.flatMap {
         case a: FuzzyQ => expanded(a)
@@ -394,11 +391,9 @@ class FtsIndex(spark: SparkSession, root: String) {
     require(!nodes.exists(_.alts.exists(a =>
       a.isInstanceOf[FuzzyQ] || a.isInstanceOf[RegexQ])),
       "dynamic alternatives must be dictionary-expanded before scoring")
-    val exactByField = nodes.flatMap(_.alts).flatMap {
-      case TermQ(f, t) => Seq((f, t))
-      case PhraseQ(f, ts) => ts.map((f, _))
-      case _ => Nil
-    }.groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
+    val exactByField = nodes.flatMap(_.alts)
+      .flatMap(a => termsOf(a).map((a.field, _)))
+      .groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
     val parts = exactByField.map { case (f, ts) =>
       col("field") === f && col("term").isin(ts: _*)
     }.toSeq
@@ -660,80 +655,158 @@ class FtsIndex(spark: SparkSession, root: String) {
   def searchCollected(q: FtsQuery): Seq[SearchResult] =
     search(q).collect().toSeq.sortBy(r => (-r.score, r.doc_id))
 
-  // ---- block-max WAND top-k (exact multi-term AND, unfiltered) ----------
+  // ---- block-max WAND top-k: the one pipeline of every top-k path -----
 
   def searchWand(text: String, k: Int = 10,
                  caseSensitive: Boolean = false): Seq[SearchResult] =
     searchWand(FtsQuery(text, caseSensitive = caseSensitive, limit = k))
 
-  /** Top-k via the block-max WAND scorer ([[Wand]]): per-shard pruned
-    * scoring in parallel (`flatMapGroups` over the shard key — shards have
-    * disjoint doc spaces, and delta generations are ordinary shards in the
-    * (1000+gen) namespace), then a driver-side merge of the tiny per-shard
-    * top-k lists. Under live deltas the snapshot's dead-doc set
-    * ([[deadDocs]], delta-sized) broadcasts into the per-shard scorers so
-    * tombstoned docs never occupy heap slots — the daemon keeps its fast
-    * path during watch mode. Falls back to [[search]] for phrase
-    * nodes (fuzzy/regex expand to terms first), when filters are present (a θ-threshold
-    * over the unfiltered stream would not be the filtered top-k), or when
-    * the dead set exceeds its driver budget. Returns the same docs and
-    * scores as the exhaustive scorer — asserted by the differential
+  /** Top-k of every query shape via the WAND pipeline ([[wandSearch]])
+    * with the kernel on the cluster. Falls back to [[searchCollected]]
+    * only when the dead set exceeds its driver budget or a filtered
+    * query's over-pull exceeds 16 384 candidates. Returns the same docs
+    * and scores as the exhaustive scorer — asserted by the differential
     * spec. */
   def searchWand(q: FtsQuery): Seq[SearchResult] = {
+    val out = wandSearch(q, new Lookups)
+    if (out == null) searchCollected(q) else out
+  }
+
+  /** What the WAND pipeline reads besides the snapshot's dictionary: by
+    * default straight from the snapshot, with the kernel on the cluster.
+    * The warm cache ([[FtsQueryCache]]) puts its LRUs in front of each
+    * lookup and runs the kernel on the driver when its df gates pass. */
+  private[query] class Lookups(val maxOverpull: Int = 16384) {
+    def expand(dyn: Seq[FieldQ]): Map[FieldQ, Seq[TermQ]] = expandAlts(dyn)
+    /** Each alternative's blocks for the driver kernel (a phrase: its
+      * aligned blocks); None runs the kernel on the cluster. */
+    def blocks(fts: Seq[(String, String)], dfs: Map[(String, String), Long])
+        : Option[FieldQ => Array[SegmentBlock]] = None
+    def rows(ids: Seq[Long], withContent: Boolean)
+        : Map[Long, SnapshotStore.DocEntry] = docRowsOf(ids, withContent)
+  }
+
+  /** The one block-max WAND top-k pipeline ([[Wand]]), every query
+    * shape: nodes, dictionary expansion, dfs, the candidate bound B, the
+    * kernel, the filter over-pull, the top-k rows. A fuzzy/regex
+    * alternative is expanded into terms, a phrase alternative is one more
+    * cursor over its aligned blocks ([[Wand.phraseBlocks]]). The snapshot's
+    * dead set ([[deadSet]]) keeps tombstoned docs out of the kernel's heap.
+    *
+    * Filtered queries run the kernel with an over-pull, then apply the
+    * reference's filter precedence (lang-excl, lang-incl, path-excl,
+    * path-incl — tantivy_index_manager.py:642-678) and re-pull with a
+    * larger k until k results survive or the match stream is exhausted —
+    * EXACT filter-then-top-k semantics (the reference's own daemon
+    * overfetches x3 and accepts recall loss). A match of an AND node
+    * matches one of its alternatives, so B = min over nodes of the summed
+    * alternative df (a phrase counts its rarest term's df); df also
+    * counts dead and delta docs, so B bounds the alive matches from above.
+    * The first pull takes min(max(3k, 30), B) candidates and a pull of B
+    * candidates is final.
+    *
+    * Returns null when the query needs the exhaustive scorer: the dead set
+    * is over its driver budget, or a filtered query would pull more than
+    * `lk.maxOverpull` candidates. */
+  private[query] def wandSearch(q: FtsQuery, lk: Lookups): Seq[SearchResult] = {
     validate(q)
-    // fuzzy/regex expand to exact term sets first, so they ride the
-    // pruned WAND path too (the reference daemon serves every query shape
-    // from its warm index)
-    val nodes = expandNodes(buildNodes(q))
-    val simple = nodes.nonEmpty && nodes.forall(_.alts.nonEmpty) &&
-      nodes.forall(_.alts.forall(_.isInstanceOf[TermQ]))
-    if (!simple || q.hasFilters) return searchCollected(q)
-    val dead: Wand.DeadSet = deadDocs match {
-      case Some(ids) if ids.isEmpty => Wand.DeadSet.empty
-      case Some(ids) => new Wand.DeadSet(ids) // sorted by construction
-      case None => return searchCollected(q)
-    }
+    val dead = deadSet.orNull
+    if (dead == null) return null
+    val alts = expandNodes(buildNodes(q), lk.expand).map(_.alts)
+    if (alts.isEmpty || alts.exists(_.isEmpty)) return Nil
+    val fts = alts.flatten.flatMap(a => termsOf(a).map((a.field, _))).distinct
+    val dfs = dfsOf(fts)
+    def altDfs(a: FieldQ): Seq[Long] = termsOf(a).map(t => dfs((a.field, t)))
+    val bound = alts.map(_.map(altDfs(_).min).sum).min
+    if (bound == 0) return Nil
     val k = if (q.limit == 0) 100000 else q.limit
-    // limit=0 forces snippets off, like search() and the reference
-    // (tantivy_index_manager.py:549-553) — ADVICE r02 #3
+    // limit=0 forces snippets off (tantivy_index_manager.py:549-553)
     val snippetLines = if (q.limit == 0) 0 else q.snippetLines
+    // a cursor's weight: a term's idf, a phrase's summed term idfs
+    val weight = alts.flatten.map(a => a -> altDfs(a).map(idfOf(nDocs, _)).sum)
+      .toMap
+    val kernel: Int => Seq[Wand.Scored] = lk.blocks(fts, dfs) match {
+      case Some(blocksOf) => wandLocal(alts, blocksOf, weight, _, dead)
+      case None => wandCluster(alts, weight, _, dead)
+    }
 
-    val pred = termPredicate(nodes)
-    // dictionary point lookup on the driver (zero Spark jobs); df = 0
-    // (absent) yields idf 0.0
-    val idfs: Map[(String, String), Double] =
-      dfsOf(nodes.flatMap(_.alts.collect {
-        case TermQ(f, t) => (f, t) }).distinct)
-        .map { case (ft, df) => ft -> idfOf(nDocs, df) }
-    val groupSpec: Seq[Seq[(String, String)]] =
-      nodes.map(_.alts.collect { case TermQ(f, t) => (f, t) })
+    val top: Seq[Wand.Scored] =
+      if (!q.hasFilters) kernel(k)
+      else {
+        // checked BEFORE the first pull too, so a filtered limit=0 query
+        // (k=100000) over a common word never collects its candidates'
+        // metadata, while one whose bound B is small takes one pull
+        var kk = math.min(math.max(3 * k, 30).toLong, bound).toInt
+        if (kk > lk.maxOverpull) return null
+        val pathMatch = PathGlob.anyMatcher(q.pathFilters)
+        val pathExcl = PathGlob.anyMatcher(q.excludePathFilters)
+        var out: Seq[Wand.Scored] = null
+        while (out == null) {
+          val cands = kernel(kk)
+          val meta = lk.rows(cands.map(_.doc), withContent = false)
+          val kept = cands.filter(s => meta.get(s.doc)
+            .exists(passesFilters(q, pathMatch, pathExcl, _)))
+          if (kept.size >= k || cands.size < kk || kk >= bound)
+            out = kept.take(k)
+          else if (kk >= lk.maxOverpull) return null
+          else kk = math.min(math.min(4L * kk, bound), lk.maxOverpull.toLong).toInt
+        }
+        out
+      }
+    if (top.isEmpty) return Nil
+    // top is ordered (score desc, doc asc) by the kernel already
+    val rows = lk.rows(top.map(_.doc), withContent = true)
+    top.flatMap(s => rows.get(s.doc).map(e => hitOf(q, snippetLines, s.doc,
+      e.repo, e.path, e.lang, e.content, e.ls, s.score)))
+  }
+
+  /** The kernel on the driver over blocks in hand: shards run in turn so
+    * the θ floor carries across them — the cross-shard pruning the
+    * cluster kernel cannot do (nextDown keeps exact-score ties alive for
+    * the doc_id tie-break). */
+  private def wandLocal(alts: Seq[Seq[FieldQ]],
+                        blocksOf: FieldQ => Array[SegmentBlock],
+                        weight: Map[FieldQ, Double], k: Int,
+                        dead: Wand.DeadSet): Seq[Wand.Scored] = {
+    val all = alts.flatten.distinct.map(a => a -> blocksOf(a)).toMap
+    val shards = all.values.flatMap(_.map(_.shard)).toSeq.distinct.sorted
+    val collected = scala.collection.mutable.ArrayBuffer.empty[Wand.Scored]
+    var floor = 0.0
+    shards.foreach { sh =>
+      collected ++= shardTopK(alts, all(_).filter(_.shard == sh), weight,
+        avgdlByField, k, floor, dead)
+      if (collected.size >= k) {
+        val kth = collected.sortBy(s => (-s.score, s.doc)).apply(k - 1)
+        floor = Math.nextDown(kth.score)
+      }
+    }
+    collected.sortBy(s => (-s.score, s.doc)).take(k).toSeq
+  }
+
+  /** The kernel on the cluster: per-shard WAND in a `flatMapGroups` over
+    * the shard key (shards have disjoint doc spaces, and delta generations
+    * are ordinary shards in the (1000+gen) namespace), a phrase aligned
+    * from the shard's own blocks, then a driver merge of the tiny
+    * per-shard top-k lists. A non-empty dead set rides the snapshot's one
+    * broadcast ([[deadBc]]) — it can reach tens of MB under heavy churn. */
+  private def wandCluster(alts: Seq[Seq[FieldQ]], weight: Map[FieldQ, Double],
+                          k: Int, dead: Wand.DeadSet): Seq[Wand.Scored] = {
+    val deadB = if (dead.isEmpty) None else deadBc
     val avgdl = avgdlByField
-
-    // the dead set rides Spark's torrent broadcast (it can reach tens of
-    // MB under heavy churn; the task closure should stay small) — one
-    // broadcast per SNAPSHOT, shared by every query
-    val deadBcLocal = if (dead.isEmpty) None else deadBc
-    val perShard = segments.where(pred)
+    segments.where(termPredicate(alts.map(Node)))
       .groupByKey(_.shard)
       .flatMapGroups { (_: Int, it: Iterator[SegmentBlock]) =>
-        val dd = deadBcLocal.map(_.value).getOrElse(Wand.DeadSet.empty)
         val byFt = it.toArray.groupBy(b => (b.field, b.term))
           .view.mapValues(_.sortBy(_.first_doc)).toMap
-        val groups = groupSpec.map(_.flatMap { ft =>
-          byFt.get(ft).map(bl => (bl, idfs.getOrElse(ft, 0.0), avgdl(ft._1)))
-        })
-        if (groups.exists(_.isEmpty)) Iterator.empty
-        else Wand.topKShard(groups, k, 0.0, dd)._1.iterator
-      }.collect()
-
-    val top = perShard.sortBy(s => (-s.score, s.doc)).take(k)
-    if (top.isEmpty) return Nil
-    // top-k rows from the doc store; top is already (score desc, doc asc)
-    val rows = docRowsOf(top.map(_.doc).toSeq, withContent = true)
-    top.toSeq.flatMap { s =>
-      rows.get(s.doc).map(e => hitOf(q, snippetLines, s.doc, e.repo, e.path,
-        e.lang, e.content, e.ls, s.score))
-    }
+        def termBlocks(f: String, t: String) =
+          byFt.getOrElse((f, t), Array.empty[SegmentBlock])
+        shardTopK(alts, {
+          case TermQ(f, t) => termBlocks(f, t)
+          case PhraseQ(f, ts) => Wand.phraseBlocks(f, ts.map(termBlocks(f, _)))
+          case _ => Array.empty[SegmentBlock]
+        }, weight, avgdl, k, 0.0,
+          deadB.fold(Wand.DeadSet.empty)(_.value)).iterator
+      }.collect().sortBy(s => (-s.score, s.doc)).take(k).toSeq
   }
 }
 
@@ -864,6 +937,48 @@ object FtsIndex {
       case None =>
         SearchResult(docId, repo, path, ls, 1, q.text, "", ls, lang, score)
     }
+  }
+
+  /** An exact alternative's terms: a term's one, a phrase's in order. */
+  private[query] def termsOf(a: FieldQ): Seq[String] = a match {
+    case TermQ(_, t) => Seq(t)
+    case PhraseQ(_, ts) => ts
+    case _ => Nil
+  }
+
+  /** One shard's top-k over AND-of-alternatives ([[Wand.topKShard]]): a
+    * cursor per alternative over `blocksOf(alt)` — the shard's blocks,
+    * sorted by first_doc — weighted by `weight(alt)`. An alternative
+    * without blocks drops out; a node left without one matches nothing. */
+  private[query] def shardTopK(alts: Seq[Seq[FieldQ]],
+                               blocksOf: FieldQ => Array[SegmentBlock],
+                               weight: Map[FieldQ, Double],
+                               avgdl: Map[String, Double], k: Int,
+                               floor: Double, dead: Wand.DeadSet)
+      : Seq[Wand.Scored] = {
+    val groups = alts.map(_.flatMap(a => Some(blocksOf(a)).filter(_.nonEmpty)
+      .map((_, weight(a), avgdl(a.field)))))
+    if (groups.exists(_.isEmpty)) Nil
+    else Wand.topKShard(groups, k, floor, dead)._1
+  }
+
+  /** The reference's post-filter precedence (Q5-Q8) plus the chunk
+    * line-range overlap (Q9 note): the per-row mirror of [[search]]'s
+    * filtered branch, facet-vs-extension quirk included. Whole-file docs
+    * carry (ls=1, le=Long.MaxValue), so the overlap checks are uniform. */
+  private[query] def passesFilters(q: FtsQuery, pathMatch: String => Boolean,
+                                   pathExcl: String => Boolean,
+                                   e: SnapshotStore.DocEntry): Boolean = {
+    if (q.excludeLanguages.nonEmpty) {
+      if (LanguageMap.extensions(q.excludeLanguages).contains(e.lang))
+        return false
+      if (q.languages.nonEmpty &&
+          !LanguageMap.extensions(q.languages).contains(e.lang)) return false
+    } else if (q.languages.nonEmpty && !q.languages.contains(e.lang))
+      return false
+    if (q.excludePathFilters.nonEmpty && pathExcl(e.path)) return false
+    if (q.pathFilters.nonEmpty && !pathMatch(e.path)) return false
+    !q.minLine.exists(e.le < _) && !q.maxLine.exists(e.ls > _)
   }
 
   /** Count of phrase alignments: positions where the terms appear at

@@ -1,6 +1,5 @@
 package graft.query
 
-import graft.functions.PathGlob
 import graft.index.FtsSchema._
 
 /** Driver-side warm-query cache — the reference daemon's in-process warm
@@ -10,53 +9,44 @@ import graft.index.FtsSchema._
   * does the same for exact, fuzzy, regex, phrase, language/path-filtered
   * AND line-range-filtered queries — every reference query shape.
   *
-  * The cluster-side [[FtsIndex]] is the source of truth; this layer keeps
-  * LRUs of QUERY-TOUCHED state on the driver:
+  * A search is the snapshot's one WAND top-k pipeline
+  * ([[FtsIndex.wandSearch]]: nodes, expansion, dfs, candidate bound,
+  * kernel, filter over-pull, rows) with this cache's LRUs in front of its
+  * lookups. The cluster-side [[FtsIndex]] is the source of truth; this
+  * layer keeps LRUs of QUERY-TOUCHED state on the driver:
   *   - posting blocks per (field, term) — fetched on first use by one
   *     `runJob` over the snapshot's key-addressed segment store
-  *     ([[SnapshotStore]]): a hash lookup per partition, no query plan;
-  *   - df per (field, term), read from the snapshot's driver dictionary
-  *     ([[FtsIndex.dfsOf]], the one df source; a binary search, no Spark
-  *     job) and consulted BEFORE any block fetch: a term
-  *     whose posting list exceeds `maxDfCached` (stopword-grade, df ~ N)
-  *     is never collected to the driver; the whole query routes to the
-  *     cluster WAND path instead. This is what makes the cache safe
-  *     against a 100 TB index — the df lookup is a dictionary point query,
-  *     and only bounded posting lists ever land in driver memory.
+  *     ([[SnapshotStore]]): a hash lookup per partition, no query plan.
+  *     The df gates run BEFORE any block fetch (df comes from the
+  *     snapshot's driver dictionary, [[FtsIndex.dfsOf]], with no Spark
+  *     job): when a term's posting list exceeds `maxDfCached`
+  *     (stopword-grade, df ~ N), or the query's terms or summed df exceed
+  *     `maxQueryTerms` / `maxQueryDf`, no block is collected to the
+  *     driver and the same pipeline runs its kernel on the cluster. This
+  *     is what makes the cache safe against a 100 TB index: only bounded
+  *     posting lists ever land in driver memory.
   *   - fuzzy/regex dictionary expansions per alternative;
-  *   - doc metadata (repo/path/lang) and doc content rows by doc_id, fetched
-  *     from the doc store by the same kind of `runJob`.
+  *   - phrase alignments per (phrase, snapshot);
+  *   - doc metadata (repo/path/lang/lines) and doc content rows by doc_id,
+  *     fetched from the doc store by the same kind of `runJob`.
   *
   * A cold query therefore runs at most two plain Spark jobs (blocks, then
   * rows) and ZERO SQL executions; df and fuzzy/regex expansion never
-  * leave the driver. Subsequent queries whose state
-  * is hot answer entirely on the driver — block-max WAND over cached
-  * blocks, a phrase being one more cursor over its aligned blocks, zero
-  * Spark jobs — in single-digit milliseconds.
+  * leave the driver. Subsequent queries whose state is hot answer
+  * entirely on the driver — block-max WAND over cached blocks, zero Spark
+  * jobs — in single-digit milliseconds.
   *
   * LIVE DELTAS: the cache keeps serving while delta generations exist —
   * the streaming regime, where the reference daemon never drops its warm
-  * index (daemon/cache.py:82-383). The snapshot's delta-sized dead-doc set
-  * ([[FtsIndex.deadDocs]]) filters tombstoned docs out of every driver
-  * scorer; segments/dict/N/avgdl are already delta-merged by [[FtsIndex]].
-  * Only a dead set past its driver budget falls back to the cluster.
+  * index (daemon/cache.py:82-383). The snapshot's delta-sized dead set
+  * ([[FtsIndex.deadSet]]) keeps tombstoned docs out of the kernel;
+  * segments/dict/N/avgdl are already delta-merged by [[FtsIndex]].
   *
-  * Filtered queries run WAND with an over-pull, then apply the reference's
-  * filter precedence (lang-excl, lang-incl, path-excl, path-incl —
-  * tantivy_index_manager.py:642-678) driver-side and re-pull with a larger
-  * k until k results survive or the match stream is exhausted — EXACT
-  * filter-then-top-k semantics (the reference's own daemon overfetches x3
-  * and accepts recall loss; we grow until exact). The pull is bounded by
-  * the query's candidate bound B, read from the dfs the gates above
-  * already looked up: a match of an AND node matches one of its
-  * alternatives, so B = min over nodes of the summed alternative df (a
-  * phrase counts its rarest term's df). df also counts dead and delta
-  * docs, so B bounds the alive matches from above. The first pull takes
-  * min(max(3k, 30), B) candidates, a pull of B candidates is final, and
-  * the query falls back to the cluster only when more than `maxOverpull`
-  * candidates would reach the driver — so a filtered limit=0 query over a
-  * rare word is served warm, and one over a common word never collects
-  * 3x100000 candidate rows.
+  * The pipeline falls back to the exhaustive [[FtsIndex.searchCollected]]
+  * in two cases only: the dead set is past its driver budget, or a
+  * filtered query would over-pull more than `maxOverpull` candidates — so
+  * a filtered limit=0 query over a rare word is served warm, and one over
+  * a common word never collects 3x100000 candidate rows.
   *
   * Concurrency: each LRU has its own monitor, held only around map
   * get/put — never across a Spark job (miss population runs unlocked;
@@ -85,6 +75,7 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
                       * start fresh. */
                     inheritFrom: Option[FtsQueryCache] = None) {
   import FtsIndex._
+  import SnapshotStore.DocEntry
 
   private def lru[K, V](cap: Int) = graft.util.Lru[K, V](cap)
 
@@ -107,7 +98,7 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     * a long streaming session. */
   private val inheritedState = inheritFrom
     .filter(_.idx.versionDir == idx.versionDir)
-    .map(p => (p.baseBlocks, p.metaRows, p.contentRows))
+    .map(p => (p.baseBlocks, p.metaRows, p.fullRows))
 
   /** Whether this cache inherited the previous snapshot's immutable state
     * (reload-without-cold-start spec hook). */
@@ -129,20 +120,18 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     * delta can add dictionary terms that match a pattern). */
   private val expansions = lru[FieldQ, Seq[TermQ]](256)
 
-  /** LRU doc_id -> (repo, path, lang, line_start, line_end) — the filter
-    * columns plus the chunk line range (1 / Long.MaxValue for whole-file
-    * docs, so the line-overlap checks hold uniformly). Rows are
-    * immutable per doc_id (ids are never reused): inherited. Dead docs
-    * never reach these lookups — every scorer filters tombstones first. */
-  private val metaRows
-      : java.util.LinkedHashMap[Long, (String, String, String, Int, Long)] =
-    inheritedState.map(_._2)
-      .getOrElse(lru[Long, (String, String, String, Int, Long)](maxDocs * 4))
+  /** LRU doc_id -> doc row without content: the filter columns plus the
+    * chunk line range (1 / Long.MaxValue for whole-file docs, so the
+    * line-overlap checks hold uniformly). Rows are immutable per doc_id
+    * (ids are never reused): inherited. Dead docs never reach these
+    * lookups — the kernel filters tombstones first. */
+  private val metaRows: java.util.LinkedHashMap[Long, DocEntry] =
+    inheritedState.map(_._2).getOrElse(lru[Long, DocEntry](maxDocs * 4))
 
-  /** LRU doc_id -> content — fetched only for FINAL top-k rows; immutable
-    * per doc_id: inherited. */
-  private val contentRows: java.util.LinkedHashMap[Long, String] =
-    inheritedState.map(_._3).getOrElse(lru[Long, String](maxDocs))
+  /** LRU doc_id -> doc row with content — fetched only for FINAL top-k
+    * rows; immutable per doc_id: inherited. */
+  private val fullRows: java.util.LinkedHashMap[Long, DocEntry] =
+    inheritedState.map(_._3).getOrElse(lru[Long, DocEntry](maxDocs))
 
   /** Weight-bounded LRU (field, terms) -> the phrase's posting blocks
     * ([[Wand.phraseBlocks]]: the docs where the terms sit at consecutive
@@ -155,11 +144,6 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
   private val phraseAligns =
     new graft.util.WeightedLru[(String, List[String]), Array[SegmentBlock]](
       64L << 20, _.iterator.map(_.n_bytes).sum)
-
-  /** The snapshot's tombstone filter (delta-sized, loaded once, by ONE
-    * Spark job on first use). None = too large for the driver budget. */
-  private lazy val deadSet: Option[Wand.DeadSet] =
-    idx.deadDocs.map(ids => new Wand.DeadSet(ids)) // sorted by construction
 
   /** Fetch-or-load blocks for (field, term) pairs; ONE `runJob` over the
     * segment store for all misses together (outside the lock). Callers
@@ -229,211 +213,85 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     }.toMap
   }
 
-  private def metaFor(ids: Seq[Long])
-      : Map[Long, (String, String, String, Int, Long)] = {
-    val hits = metaRows.synchronized {
-      ids.flatMap(id => Option(metaRows.get(id)).map(id -> _)).toMap
+  /** Doc rows by id — with content only for the FINAL top-k rows — in
+    * ONE doc-store lookup for the ids missing from the LRU read. */
+  private def rowsFor(ids: Seq[Long], withContent: Boolean)
+      : Map[Long, DocEntry] = {
+    val lru = if (withContent) fullRows else metaRows
+    val hits = lru.synchronized {
+      ids.flatMap(id => Option(lru.get(id)).map(id -> _)).toMap
     }
-    val missing = ids.filterNot(hits.contains)
+    val missing = ids.filterNot(hits.contains).distinct
     if (missing.isEmpty) return hits
-    val got = idx.docRowsOf(missing, withContent = false)
-      .map { case (id, e) => id -> (e.repo, e.path, e.lang, e.ls, e.le) }
+    val got = idx.docRowsOf(missing, withContent)
     metaRows.synchronized {
-      got.foreach { case (id, row) => metaRows.put(id, row) }
+      got.foreach { case (id, e) => metaRows.put(id, e.copy(content = null)) }
+    }
+    if (withContent) fullRows.synchronized {
+      got.foreach { case (id, e) => fullRows.put(id, e) }
     }
     hits ++ got
   }
 
-  /** Meta AND content rows for the FINAL top-k ids in ONE doc-store lookup.
-    * Ids missing from EITHER cache are fetched together; both LRUs are
-    * populated. */
-  private def rowsFor(ids: Seq[Long])
-      : (Map[Long, (String, String, String, Int, Long)], Map[Long, String]) = {
-    val metaHits = metaRows.synchronized {
-      ids.flatMap(id => Option(metaRows.get(id)).map(id -> _)).toMap
-    }
-    val contentHits = contentRows.synchronized {
-      ids.flatMap(id => Option(contentRows.get(id)).map(id -> _)).toMap
-    }
-    val missing = ids.filter(id =>
-      !metaHits.contains(id) || !contentHits.contains(id)).distinct
-    if (missing.isEmpty) return (metaHits, contentHits)
-    val got = idx.docRowsOf(missing, withContent = true)
-    val gotMeta = got.map { case (id, e) =>
-      id -> (e.repo, e.path, e.lang, e.ls, e.le) }
-    val gotContent = got.map { case (id, e) => id -> e.content }
-    metaRows.synchronized {
-      gotMeta.foreach { case (id, row) => metaRows.put(id, row) }
-    }
-    contentRows.synchronized {
-      gotContent.foreach { case (id, c) => contentRows.put(id, c) }
-    }
-    (metaHits ++ gotMeta, contentHits ++ gotContent)
-  }
-
-  /** Expand fuzzy/regex alternatives, LRU-cached; one scan of the driver
-    * dictionary per missing alternative (via [[FtsIndex.expandAlts]] — the
-    * same expansion the cluster path runs, so results are identical by
-    * construction; the LRU spares a repeated regex its milliseconds-long
-    * scan). The per-call map is built from LRU hits + the expandAlts return value
-    * directly — the LRU is only a cache, never the source of truth (a
-    * query with more alternatives than the LRU capacity must not read
-    * back its own evictions — ADVICE r03 #4). */
-  private def expandLocal(nodes: Seq[Node]): Seq[Node] = {
-    val dyn = nodes.flatMap(_.alts).collect {
-      case f: FuzzyQ => f: FieldQ
-      case r: RegexQ => r: FieldQ
-    }.distinct
-    if (dyn.isEmpty) return nodes
+  /** Fuzzy/regex expansions, LRU-cached in front of
+    * [[FtsIndex.expandAlts]] (the LRU spares a repeated regex its
+    * milliseconds-long dictionary scan). The map is built from LRU hits +
+    * the expandAlts return value directly — the LRU is only a cache, never
+    * the source of truth (a query with more alternatives than the LRU
+    * capacity must not read back its own evictions — ADVICE r03 #4). */
+  private def expandCached(dyn: Seq[FieldQ]): Map[FieldQ, Seq[TermQ]] = {
     val hits = expansions.synchronized {
       dyn.flatMap(a => Option(expansions.get(a)).map(a -> _)).toMap
     }
     val missing = dyn.filterNot(hits.contains)
-    val fresh: Map[FieldQ, Seq[TermQ]] =
-      if (missing.isEmpty) Map.empty
-      else idx.expandAlts(missing)
-    if (fresh.nonEmpty) expansions.synchronized {
+    if (missing.isEmpty) return hits
+    val fresh = idx.expandAlts(missing)
+    expansions.synchronized {
       fresh.foreach { case (a, ts) => expansions.put(a, ts) }
     }
-    val all = hits ++ fresh
-    nodes.map { nd =>
-      Node(nd.alts.flatMap {
-        case a: FuzzyQ => all(a)
-        case a: RegexQ => all(a)
-        case a => Seq(a)
-      })
-    }
+    hits ++ fresh
   }
 
-  /** The reference's post-filter precedence (Q5-Q8) plus the chunk
-    * line-range overlap (Q9 note), driver-side mirror of FtsIndex.search's
-    * filtered branch (incl. the facet-vs-extension expansion quirk).
-    * Whole-file docs carry (ls=1, le=Long.MaxValue), making the overlap
-    * checks uniform. */
-  private def passesFilters(q: FtsQuery, lang: String,
-                            pathMatch: String => Boolean,
-                            pathExcl: String => Boolean,
-                            path: String, ls: Int, le: Long): Boolean = {
-    if (q.excludeLanguages.nonEmpty) {
-      val excl = LanguageMap.extensions(q.excludeLanguages)
-      if (excl.contains(lang)) return false
-      if (q.languages.nonEmpty &&
-          !LanguageMap.extensions(q.languages).contains(lang)) return false
-    } else if (q.languages.nonEmpty && !q.languages.contains(lang))
-      return false
-    if (q.excludePathFilters.nonEmpty && pathExcl(path)) return false
-    if (q.pathFilters.nonEmpty && !pathMatch(path)) return false
-    if (q.minLine.exists(m => le < m)) return false
-    if (q.maxLine.exists(m => ls > m)) return false
-    true
-  }
-
-  /** Route a query to the cluster WAND path (which falls back further),
-    * counting the fallback for [[stats]]. */
-  private def routeCluster(q: FtsQuery): Seq[SearchResult] = {
-    clusterRouted.increment()
-    idx.searchWand(q)
-  }
-
-  /** Warm top-k search over cached state; see class doc for the supported
-    * shapes. Falls back to [[FtsIndex.searchWand]] (which falls back
-    * further) whenever a shape or budget rules the driver path out. */
+  /** Top-k search through the snapshot's WAND pipeline
+    * ([[FtsIndex.wandSearch]]) with this cache's lookups; see the class
+    * doc. Counts a query as routed when its kernel ran on the cluster or
+    * it fell back to [[FtsIndex.searchCollected]]. */
   def search(q: FtsQuery): Seq[SearchResult] = {
-    val out = searchDriver(q)
-    if (out != null) { warmServed.increment(); out }
-    else routeCluster(q)
+    val lk = new CacheLookups
+    val out = idx.wandSearch(q, lk)
+    if (out == null || lk.routed) clusterRouted.increment()
+    else warmServed.increment()
+    if (out == null) idx.searchCollected(q) else out
   }
 
-  /** The driver-side path; null = route to the cluster (the counters and
-    * the single fallback call site live in [[search]]). */
-  private def searchDriver(q: FtsQuery): Seq[SearchResult] = {
-    idx.validate(q)
-    // live deltas: keep serving warm, filtering tombstoned docs out of
-    // every scorer below; only an oversized dead set leaves the driver
-    val dead: Wand.DeadSet = deadSet match {
-      case Some(d) => d
-      case None => return null
-    }
-    val nodes = expandLocal(idx.buildNodes(q))
-    if (nodes.isEmpty) return Nil
-    if (nodes.exists(_.alts.isEmpty)) return Nil // AND: unmatched word
-    val fts = nodes.flatMap(_.alts.flatMap {
-      case TermQ(f, t) => Seq((f, t))
-      case PhraseQ(f, ts) => ts.map((f, _))
-      case _ => Nil
-    }).distinct
-
+  /** One query's lookups through this cache's LRUs; `routed` records that
+    * the df gates sent its kernel to the cluster. */
+  private final class CacheLookups extends idx.Lookups(maxOverpull) {
+    var routed = false
+    override def expand(dyn: Seq[FieldQ]): Map[FieldQ, Seq[TermQ]] =
+      expandCached(dyn)
     // the block-fetch gates: a stopword-grade term, a too-broad expansion
     // (e.g. regex ".*"), or a query whose SUMMED posting volume exceeds
-    // the budget routes to the cluster — nothing index-sized is ever
+    // the budget runs on the cluster — nothing index-sized is ever
     // collected to the driver
-    if (fts.size > maxQueryTerms) return null
-    val dfs = idx.dfsOf(fts)
-    if (dfs.valuesIterator.exists(_ > maxDfCached) ||
-        dfs.valuesIterator.sum > maxQueryDf) return null
-    // the candidate bound B of the class doc
-    val bound: Long = nodes.map(_.alts.map {
-      case TermQ(f, t) => dfs((f, t))
-      case PhraseQ(f, ts) => ts.map(t => dfs((f, t))).min
-      case _ => 0L
-    }.sum).min
-    if (bound == 0) return Nil
-
-    val k = if (q.limit == 0) 100000 else q.limit
-    val snippetLines = if (q.limit == 0) 0 else q.snippetLines
-    val blocks = blocksFor(fts)
-    val idfs = dfs.map { case (ft, df) => ft -> FtsIndex.idfOf(idx.nDocs, df) }
-    // one kernel cursor per alternative: a term's blocks and idf, or a
-    // phrase's aligned blocks and the sum of its terms' idfs (the phrase
-    // weight of FtsIndex.scoreDoc)
-    val groups = nodes.map(_.alts.collect {
-      case TermQ(f, t) => (blocks((f, t)), idfs((f, t)), f)
-      case pq @ PhraseQ(f, ts) =>
-        (phraseBlocksFor(pq, blocks), ts.map(t => idfs((f, t))).sum, f)
-    })
-    /** The top kk candidates, and whether they are every match. */
-    def pullTopK(kk: Int): (Seq[Wand.Scored], Boolean) = {
-      val got = wandLocal(groups, kk, dead)
-      (got, got.size < kk || kk >= bound)
-    }
-
-    val top: Seq[Wand.Scored] =
-      if (!q.hasFilters) pullTopK(k)._1
+    override def blocks(fts: Seq[(String, String)],
+                        dfs: Map[(String, String), Long])
+        : Option[FieldQ => Array[SegmentBlock]] = {
+      routed = fts.size > maxQueryTerms ||
+        dfs.valuesIterator.exists(_ > maxDfCached) ||
+        dfs.valuesIterator.sum > maxQueryDf
+      if (routed) None
       else {
-        // the documented contract: beyond maxOverpull candidates the query
-        // belongs on the cluster — checked BEFORE the first pull too, so a
-        // filtered limit=0 query (k=100000) over a common word never
-        // collects its candidates' metadata through the driver, while one
-        // whose bound B is small is answered here in one pull
-        var kk = math.min(math.max(3 * k, 30).toLong, bound).toInt
-        if (kk > maxOverpull) return null
-        val pathMatch = PathGlob.anyMatcher(q.pathFilters)
-        val pathExcl = PathGlob.anyMatcher(q.excludePathFilters)
-        var out: Option[Seq[Wand.Scored]] = None
-        while (out.isEmpty) {
-          val (cands, exhausted) = pullTopK(kk)
-          val meta = metaFor(cands.map(_.doc))
-          val kept = cands.filter { s =>
-            meta.get(s.doc).exists { case (_, path, lang, ls, le) =>
-              passesFilters(q, lang, pathMatch, pathExcl, path, ls, le)
-            }
-          }
-          if (kept.size >= k || exhausted) out = Some(kept.take(k))
-          else if (kk >= maxOverpull) return null
-          else kk = math.min(math.min(4L * kk, bound), maxOverpull.toLong).toInt
+        val b = blocksFor(fts)
+        Some {
+          case TermQ(f, t) => b((f, t))
+          case pq: PhraseQ => phraseBlocksFor(pq, b)
+          case _ => Array.empty[SegmentBlock]
         }
-        out.get
-      }
-    if (top.isEmpty) return Nil
-
-    // top is ordered (score desc, doc asc) by the kernel already
-    val (meta, content) = rowsFor(top.map(_.doc))
-    top.flatMap { s =>
-      meta.get(s.doc).map { case (repo, path, lang, ls, _) =>
-        FtsIndex.hitOf(q, snippetLines, s.doc, repo, path, lang,
-          content.getOrElse(s.doc, ""), ls, s.score)
       }
     }
+    override def rows(ids: Seq[Long], withContent: Boolean)
+        : Map[Long, DocEntry] = rowsFor(ids, withContent)
   }
 
   /** A phrase's aligned blocks, LRU-cached per (phrase, snapshot). */
@@ -447,31 +305,6 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
       phraseAligns.synchronized(phraseAligns.put(key, out))
       out
     }
-  }
-
-  /** Driver WAND over cached blocks: shards run sequentially so the θ
-    * floor carries across them — the cross-shard pruning the distributed
-    * path cannot do (nextDown keeps exact-score ties alive for the doc_id
-    * tie-break). */
-  private def wandLocal(groups: Seq[Seq[(Array[SegmentBlock], Double, String)]],
-                        k: Int, dead: Wand.DeadSet): Seq[Wand.Scored] = {
-    val shards = groups.flatten.flatMap(_._1.map(_.shard)).distinct.sorted
-    val collected = scala.collection.mutable.ArrayBuffer.empty[Wand.Scored]
-    var floor = 0.0
-    shards.foreach { sh =>
-      val shardGroups = groups.map(_.flatMap { case (bl, idf, f) =>
-        val own = bl.filter(_.shard == sh)
-        if (own.isEmpty) None else Some((own, idf, idx.avgdl(f)))
-      })
-      if (!shardGroups.exists(_.isEmpty)) {
-        collected ++= Wand.topKShard(shardGroups, k, floor, dead)._1
-        if (collected.size >= k) {
-          val kth = collected.sortBy(s => (-s.score, s.doc)).apply(k - 1)
-          floor = Math.nextDown(kth.score)
-        }
-      }
-    }
-    collected.sortBy(s => (-s.score, s.doc)).take(k).toSeq
   }
 
   // ---- test hooks --------------------------------------------------------

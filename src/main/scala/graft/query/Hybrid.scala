@@ -17,8 +17,9 @@ import org.apache.spark.sql.DataFrame
   *
   * SERVING COMPOSITION (round 5): the production overloads take the FTS
   * half as a STRATEGY — default [[ReloadingFtsIndex.searchCached]], the
-  * driver warm cache whose own fallback chain (cache -> WAND -> exhaustive
-  * cluster) already covers every budget case — so a warm hybrid query is
+  * driver warm cache, whose WAND pipeline runs its kernel on the cluster
+  * when a df gate fails and falls back to the exhaustive scorer only past
+  * the dead-set or over-pull budget — so a warm hybrid query is
   * warm on BOTH halves (the reference's ~120 ms hybrid total,
   * docs/query-guide.md:501, is warm-daemon FTS + HNSW). The exact
   * [[FtsIndex.searchCollected]] scan remains the contract mode.
@@ -84,8 +85,8 @@ object Hybrid {
       warmSemantic)
 
   /** PRODUCTION hybrid: warm on both halves. The FTS half serves through
-    * [[ReloadingFtsIndex.searchCached]] (driver cache -> WAND ->
-    * exhaustive fallback chain, reloading on index movement); the
+    * [[ReloadingFtsIndex.searchCached]] (the warm cache's WAND pipeline,
+    * reloading on index movement); the
     * semantic half through the IVF index's warm cell cache. Hot queries
     * touch zero Spark jobs on either side. */
   def search(rel: ReloadingFtsIndex, ann: graft.ops.AnnIndex,

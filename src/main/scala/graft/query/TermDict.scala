@@ -76,8 +76,9 @@ private[query] object TermDict {
     }
   }
 
-  /** The dictionary's runs collected to the driver: one job, which also
-    * fills the relation's columnar cache when it is persisted. */
+  /** The dictionary's runs collected to the driver: one job, the one
+    * read of the relation serving makes ([[FtsIndex.warm]] leaves the
+    * relation uncached). */
   def collect(dict: DataFrame): TermDict =
     new TermDict(runs(dict).collect().toSeq.flatten.groupBy(_._1)
       .map { case (f, rs) => f -> rs.map(_._2).toArray })

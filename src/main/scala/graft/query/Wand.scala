@@ -6,7 +6,8 @@ import graft.index.FtsSchema.SegmentBlock
 /** Block-max WAND top-k scorer (Ding & Suel BMW, public algorithm; the
   * basis of Tantivy/Lucene top-k pruning — north-star flagship operator).
   *
-  * Runs per shard, INSIDE a `flatMapGroups` on the cluster or over the
+  * The kernel of the one top-k pipeline ([[FtsIndex.wandSearch]]), which
+  * runs it per shard, INSIDE a `flatMapGroups` on the cluster or over the
   * warm cache's blocks on the driver (shard doc-id spaces are disjoint
   * and blocks never cross shards, so each shard is an independent
   * doc-aligned stream); per-shard top-k results merge into a global top-k.
@@ -31,7 +32,7 @@ object Wand {
     * eventual-consistency contract) but must never occupy a top-k heap
     * slot (they'd raise θ past alive docs ranked below them). Delta-sized:
     * one id per superseded document; built once per index snapshot
-    * ([[FtsIndex.deadDocs]]) and broadcast to per-shard scorers. */
+    * ([[FtsIndex.deadSet]]) and broadcast to per-shard scorers. */
   final class DeadSet(sorted: Array[Long]) extends Serializable {
     def contains(d: Long): Boolean =
       sorted.length != 0 && java.util.Arrays.binarySearch(sorted, d) >= 0

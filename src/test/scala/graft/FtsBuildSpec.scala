@@ -124,4 +124,29 @@ class FtsBuildSpec extends AnyFunSuite {
       assert(docs.toSeq === docs.sorted.toSeq)
     }
   }
+
+  test("stageShards scopes its split floor to its own session: the " +
+       "caller's session never sees spark.sql.files.minPartitionNum") {
+    val key = "spark.sql.files.minPartitionNum"
+    assert(spark.conf.getOption(key).isEmpty)
+    val root = TestSpark.tempDir("minpart")
+    val cfg = FtsIndexBuilder.Config(nShards = 3, segmentPartitions = 5)
+    val vDir = FtsIndexBuilder.stageDocs(spark,
+      TestSpark.docsDf(Fixtures.corpusA ++ Fixtures.corpusB), root, cfg)
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val run = scala.concurrent.Future(
+      FtsIndexBuilder.stageShards(spark, vDir, cfg, None))
+    var seen = Set.empty[Option[String]]
+    var polls = 0
+    while (!run.isCompleted) {
+      seen += spark.conf.getOption(key); polls += 1
+      Thread.sleep(1)
+    }
+    val (built, _) = scala.concurrent.Await.result(run,
+      scala.concurrent.duration.Duration.Inf)
+    assert(built.sorted === Seq(0, 1, 2))
+    assert(polls > 0 && seen === Set(None),
+      s"the caller's session saw $key set: $seen")
+    assert(spark.conf.getOption(key).isEmpty)
+  }
 }

@@ -7,11 +7,13 @@ import graft.index.FtsIndexBuilder
 import graft.query.{FtsIndex, FtsQuery}
 
 /** Seeded randomized differential testing: a generated corpus and a
-  * generated query battery, asserting the three scoring paths (exhaustive
-  * / block-max WAND / driver warm cache) return identical docs and
-  * fp-tolerant-identical scores for EVERY shape (SURVEY §5 property-test
-  * strategy; results must also be invariant to parallelism, which the
-  * build specs cover). Deterministic seed — failures reproduce exactly. */
+  * generated query battery, asserting the exhaustive scorer and the WAND
+  * pipeline — its kernel on the cluster (`searchWand`, and the warm cache
+  * with every df gate failing) or on the driver (the warm cache) — return
+  * identical docs and fp-tolerant-identical scores for EVERY shape
+  * (SURVEY §5 property-test strategy; results must also be invariant to
+  * parallelism, which the build specs cover). Deterministic seed —
+  * failures reproduce exactly. */
 class FtsDifferentialFuzzSpec extends AnyFunSuite {
 
   private def spark = TestSpark.spark
@@ -81,6 +83,9 @@ class FtsDifferentialFuzzSpec extends AnyFunSuite {
     FtsIndexBuilder.build(spark, TestSpark.docsDf(docs), root, buildCfg)
     val idx = new FtsIndex(spark, root).warm()
     val cache = new graft.query.FtsQueryCache(idx)
+    // maxDfCached = 0: every query with a matching term fails the df
+    // gate, so the cache's pipeline runs its kernel on the cluster
+    val clusterCache = new graft.query.FtsQueryCache(idx, maxDfCached = 0)
 
     val mixed = mixedPhrases(docs.head)
     val queries = (0 until 40).map(_ => randQuery()) ++ mixed
@@ -91,16 +96,25 @@ class FtsDifferentialFuzzSpec extends AnyFunSuite {
       if (mixed.contains(q)) assert(ex.nonEmpty, s"no match for $q ($tag)")
       val wand = idx.searchWand(q).map(r => (r.doc_id, r.score))
       val cached = cache.search(q).map(r => (r.doc_id, r.score))
+      val routed = clusterCache.search(q).map(r => (r.doc_id, r.score))
       if (ex.nonEmpty) nonEmpty += 1
-      assert(wand.map(_._1) === ex.map(_._1), s"WAND docs for $q ($tag)")
-      assert(cached.map(_._1) === ex.map(_._1), s"cached docs for $q ($tag)")
-      wand.zip(ex).foreach { case (a, b) =>
-        assert(math.abs(a._2 - b._2) < 1e-8, s"WAND score for $q ($tag)") }
-      cached.zip(ex).foreach { case (a, b) =>
-        assert(math.abs(a._2 - b._2) < 1e-8, s"cached score for $q ($tag)") }
+      for ((what, got) <- Seq("WAND" -> wand, "cached" -> cached,
+                              "cluster-cached" -> routed)) {
+        assert(got.map(_._1) === ex.map(_._1), s"$what docs for $q ($tag)")
+        got.zip(ex).foreach { case (a, b) =>
+          assert(math.abs(a._2 - b._2) < 1e-8, s"$what score for $q ($tag)") }
+      }
     }
     // the battery must actually exercise matching queries
     assert(nonEmpty >= 10, s"only $nonEmpty of ${queries.size} queries matched")
+    // a matching query cannot pass the df gate, and only a query without
+    // a matching term skips the kernel (counted as served on the driver)
+    val st = clusterCache.stats
+    assert(st.warmServed + st.clusterRouted === queries.size)
+    assert(st.clusterRouted >= nonEmpty,
+      s"${st.clusterRouted} routed, $nonEmpty matched ($tag)")
+    assert(st.blockHits + st.blockMisses === 0,
+      s"the cluster kernel fetches no blocks to the driver ($tag)")
     idx.cool()
   }
 

@@ -30,17 +30,20 @@ class FtsQueryCacheSpec extends AnyFunSuite {
     }
   }
 
-  /** Counts SQL executions finished between construction and [[count]]:
+  /** Counts SQL executions finished between construction and [[count]]
+    * (those `counts` selects):
     * the listener bus is asynchronous, so [[count]] runs a sentinel
     * execution and waits until it is delivered (events arrive in order). */
-  private final class SqlExecutions extends QueryExecutionListener {
+  private final class SqlExecutions(
+      counts: QueryExecution => Boolean = _ => true)
+      extends QueryExecutionListener {
     private val seen = new java.util.concurrent.atomic.AtomicInteger
     @volatile private var sentinelSeen = false
     private val sentinelRows = 7919L
     override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
       if (qe.analyzed.toString.contains(s"Range (0, $sentinelRows"))
         sentinelSeen = true
-      else seen.incrementAndGet()
+      else if (counts(qe)) seen.incrementAndGet()
     override def onFailure(f: String, qe: QueryExecution,
                            e: Exception): Unit = seen.incrementAndGet()
     spark.listenerManager.register(this)
@@ -99,6 +102,55 @@ class FtsQueryCacheSpec extends AnyFunSuite {
     idx.cool()
     assert((storeIds intersect mine).isEmpty,
       "cool() must unpersist every store")
+  }
+
+  /** Whether an execution's plan reads a `docs` relation (base or delta). */
+  private def scansDocs(qe: QueryExecution): Boolean =
+    qe.analyzed.collectLeaves().exists {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.location.rootPaths.exists(_.toString.stripSuffix("/")
+              .endsWith("/docs"))
+          case _ => false
+        }
+      case _ => false
+    }
+
+  test("searchWand serves phrase and filtered queries with the WAND " +
+       "kernel: no SQL execution scans the docs relation") {
+    val idx = new FtsIndex(spark,
+      freshIndex(Fixtures.corpusA ++ Fixtures.corpusB)).warm()
+    val qs = Seq(FtsQuery("login_user", limit = 5),
+      FtsQuery("def", languages = Seq("python"), limit = 3),
+      FtsQuery("password", pathFilters = Seq("src/*"), limit = 0))
+    val expected = qs.map(idx.searchCollected)
+    expected.foreach(ex => assert(ex.nonEmpty))
+    // let the oracle's executions reach the (asynchronous) listener bus
+    new SqlExecutions(_ => false).count()
+    val docScans = new SqlExecutions(scansDocs)
+    val got = qs.map(idx.searchWand)
+    assert(docScans.count() === 0,
+      "searchWand must not plan the exhaustive scorer's docs scan")
+    got.zip(expected).zip(qs).foreach { case ((g, ex), q) =>
+      assertSame(g, ex, q.toString) }
+    // the detector sees the exhaustive scorer's docs scan
+    val control = new SqlExecutions(scansDocs)
+    idx.searchCollected(qs.head)
+    assert(control.count() > 0)
+    idx.cool()
+  }
+
+  test("warm() leaves the dictionary relation uncached: serving reads " +
+       "only the driver dictionary") {
+    val idx = new FtsIndex(spark,
+      freshIndex(Fixtures.corpusA ++ Fixtures.corpusB)).warm()
+    import org.apache.spark.sql.classic.ClassicConversions._
+    val cm = spark.sharedState.cacheManager
+    assert(cm.lookupCachedData(idx.dict).isEmpty)
+    assert(cm.lookupCachedData(idx.segments).nonEmpty, "warm() caches segments")
+    assert(idx.searchWand(FtsQuery("authenticate", limit = 3)).nonEmpty)
+    idx.cool()
   }
 
   test("a filtered query whose df bound exceeds maxOverpull goes to the " +

@@ -122,6 +122,40 @@ class FtsRound6Spec extends AnyFunSuite {
     ann.close()
   }
 
+  test("AnnIndex.topK's runJob path ships at most k pairs per partition " +
+       "from a skewed cell much larger than k, in (sim desc, vec_id asc) " +
+       "order with NaN similarities dropped") {
+    val rng = new scala.util.Random(7)
+    val q = Array(1.0, 0.5, 0.0, 0.25)
+    val distinct = (0L until 400L).map(id => id -> Array.fill(4)(rng.nextFloat()))
+    // exact ties across ids, and one zero-norm vector (NaN similarity)
+    val cell = distinct ++ distinct.take(20).map { case (id, e) =>
+      (1000L + id) -> e } :+ (5000L -> Array.fill(4)(0f))
+    val all = graft.ops.AnnIndex.cellTopK(cell.iterator, q,
+      Double.NegativeInfinity, cell.size)
+    assert(all.length === cell.size - 1, "the NaN pair is dropped")
+    assert(all.toSeq === all.toSeq.sortBy { case (id, sim) => (-sim, id) })
+    for (k <- Seq(1, 5, 17); floor <- Seq(Double.NegativeInfinity, 0.8)) {
+      val top = graft.ops.AnnIndex.cellTopK(cell.iterator, q, floor, k)
+      assert(top.toSeq === all.filter(_._2 >= floor).take(k).toSeq,
+        s"k=$k floor=$floor")
+    }
+    assert(graft.ops.AnnIndex.cellTopK(cell.iterator, q, 0.0, 0).isEmpty)
+
+    // a fresh-build index whose vectors crowd one direction: the runJob
+    // path still equals the warm path
+    val s = spark
+    import s.implicits._
+    val emb = cell.map { case (id, e) =>
+      (id, if (id % 50 == 0) e.map(-_) else e.map(_ + 4f)) }
+      .filter(_._1 != 5000L).toDF("vec_id", "embedding")
+    val ann = new graft.ops.AnnIndex(emb, nCells = 4, nProbe = 2)
+    val qv = Array(4.5f, 4.2f, 4.7f, 4.1f)
+    assert(ann.topK(qv, 5) === ann.topKWarm(qv, 5))
+    assert(ann.topK(qv, 5, probes = 4) === ann.topKWarm(qv, 5, probes = 4))
+    ann.close()
+  }
+
   test("duplicate-word exact query rides the join fallback and scores " +
        "each node occurrence (\"merge merge\" = 2x \"merge\")") {
     val root = freshIndex(Fixtures.corpusA)

@@ -79,7 +79,7 @@ class WandSpec extends AnyFunSuite {
     assert(decoded < total, s"expected pruning: decoded=$decoded total=$total")
   }
 
-  test("wand falls back to exhaustive for fuzzy/regex/filtered queries") {
+  test("wand returns no rows for an absent exact term, like exhaustive") {
     val rs = fixtureIndex.searchWand("authenticat", 5) // no such exact term
     assert(rs.isEmpty) // exact term absent => AND fails, same as exhaustive
   }
