@@ -147,23 +147,39 @@ object FtsIndexBuilder {
       // shape. The write's per-task dynamic-partition sort is keyed
       // (shard, doc_id), so every written file is an ascending doc range
       // and the segment stage's posting runs stay long.
+      //
+      // A duplicated source key would be several rows of one doc and
+      // multiply on the join below: equal keys are neighbours in the
+      // window, so a `lag` over it flags each repeat, and the job that
+      // counts the ids also finds the least flagged key.
       val idTable = source.select(keyCols.map(col): _*)
         .withColumn("shard",
           pmod(xxhash64($"repo", $"path"), lit(cfg.nShards)).cast("int"))
         .withColumn("doc_id",
           $"shard".cast("long") * lit(1L << 40) +
             (row_number().over(w) - 1))
+        .withColumn("dup", keyCols.map(c =>
+          lag(col(c), 1).over(w) <=> col(c)).reduce(_ && _))
         .persist()
-      val nIds = idTable.count()
+      val idStats = idTable.agg(count(lit(1)),
+        min(when($"dup", struct(keyCols.map(col): _*)))).head()
+      if (!idStats.isNullAt(1)) {
+        idTable.unpersist()
+        throw new IllegalArgumentException(
+          s"duplicate source key (${keyCols.mkString(", ")}) = " +
+            idStats.getStruct(1).toSeq.mkString("(", ", ", ")"))
+      }
+      val nIds = idStats.getLong(0)
+      val ids = idTable.drop("dup")
       val payload = withIds.drop("doc_id", "shard", "sha256", "ids", "clen")
       val attached =
         if (nIds <= MaxBroadcastIdRows)
-          payload.join(broadcast(idTable), keyCols)
+          payload.join(broadcast(ids), keyCols)
         else
           // beyond the broadcast budget (~10^8-row corpora per build
           // partition) the join shuffles the payload by its key — the
           // former window plan's single content exchange, not two
-          payload.join(idTable, keyCols)
+          payload.join(ids, keyCols)
       attached
         .withColumn("sha256", sha2($"content", 256))
         .withColumn("ids", coalesce($"identifiers", extractIds($"content")))

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Tokenizer
@@ -106,10 +106,21 @@ class FtsIndex(spark: SparkSession, root: String) {
     }
   }
 
-  val segments: Dataset[SegmentBlock] = {
-    val paths = s"$versionDir/segments/*" +: deltaSub("segments")
-    spark.read.parquet(paths: _*).as[SegmentBlock]
+  /** One read per segment directory, each holding whole shards: a base
+    * shard group's `segments/g<gid>` and a delta generation's `segments`
+    * (its one shard). The schema is given, so no read infers one. The
+    * [[segments]] relation and the segment store share these reads. */
+  private val segmentDirs: Seq[Dataset[SegmentBlock]] = {
+    val hfs = FtsIndexBuilder.fs(spark, root)
+    val base = hfs.listStatus(new org.apache.hadoop.fs.Path(
+      s"$versionDir/segments")).filter(_.isDirectory).map(_.getPath.toString)
+    val schema = Encoders.product[SegmentBlock].schema
+    (base.sorted.toSeq ++ deltaSub("segments"))
+      .map(spark.read.schema(schema).parquet(_).as[SegmentBlock])
   }
+
+  /** Base and delta posting blocks: the union of the directory reads. */
+  val segments: Dataset[SegmentBlock] = segmentDirs.reduce(_ union _)
 
   /** Global dictionary: base + delta contributions summed. Dead docs keep
     * contributing until compaction (reference eventual-consistency
@@ -191,12 +202,14 @@ class FtsIndex(spark: SparkSession, root: String) {
   private val maxDeadDocs = 1 << 22
 
   /** Key-addressed stores over the snapshot's segments and alive docs
-    * ([[SnapshotStore]]): the warm cache's block and row misses run as
-    * one plain `runJob` each over these, never as a Catalyst plan. The
-    * exhaustive and cluster-WAND scorers keep reading the relations
-    * above. */
+    * ([[SnapshotStore]]), the only in-memory copy of either: the warm
+    * cache's block and row misses and the cluster WAND kernel run as one
+    * plain `runJob` each over these, never as a Catalyst plan. The segment
+    * store has one partition per segment directory, so each partition
+    * holds whole shards. The exhaustive scorer reads the relations above
+    * from Parquet. */
   private[query] val segmentStore = new SnapshotStore(
-    "graft-segment-store", () => SnapshotStore.segmentParts(segments))
+    "graft-segment-store", () => SnapshotStore.segmentParts(segmentDirs))
   private[query] val docStore = new SnapshotStore(
     "graft-doc-store", () => SnapshotStore.docParts(effectiveDocs))
 
@@ -263,23 +276,20 @@ class FtsIndex(spark: SparkSession, root: String) {
     deadSet.filter(!_.isEmpty).map(spark.sparkContext.broadcast(_))
   }
 
-  /** Cache the docs and segments relations across queries (the reference
-    * daemon's warm index cache analog, server/cache/fts_index_cache.py),
-    * build the key-addressed stores over them and collect the term
-    * dictionary. Each store build reads its relation through the cache
-    * just registered, so ONE job per relation both fills the columnar
-    * cache and builds the store. The dictionary relation is not cached:
-    * serving reads only the driver dictionary, which one job collects. */
+  /** Build the key-addressed stores (the reference daemon's warm index
+    * cache analog, server/cache/fts_index_cache.py) and collect the term
+    * dictionary: one job per store reads its relation from Parquet, one
+    * job collects the dictionary. No relation is cached besides: the
+    * stores are the one in-memory copy of the segments and docs. */
   def warm(): this.type = {
-    docs.persist(); segments.persist()
     docStore.materialize(); segmentStore.materialize(); termDict
     this
   }
 
-  /** Release relations persisted by [[warm]] (called on reload swap), the
-    * key-addressed stores, plus the snapshot's dead-set broadcast if one
-    * was built. The driver dictionary stays: it is plain driver heap, so a
-    * racing reader keeps its df lookups job-free.
+  /** Release the key-addressed stores (called on reload swap) plus the
+    * snapshot's dead-set broadcast if one was built. The driver dictionary
+    * stays: it is plain driver heap, so a racing reader keeps its df
+    * lookups job-free.
     *
     * The broadcast is UNPERSISTED, never destroyed: [[ReloadingFtsIndex]]
     * swaps and cools the stale snapshot while unsynchronized readers may
@@ -288,7 +298,6 @@ class FtsIndex(spark: SparkSession, root: String) {
     * re-broadcasts on next use and is reclaimed by the ContextCleaner
     * when the snapshot is GC'd (ADVICE r04 #1). */
   def cool(): this.type = {
-    docs.unpersist(); segments.unpersist()
     docStore.release(); segmentStore.release()
     if (deadBcBuilt) deadBc.foreach(_.unpersist())
     this
@@ -662,9 +671,10 @@ class FtsIndex(spark: SparkSession, root: String) {
     searchWand(FtsQuery(text, caseSensitive = caseSensitive, limit = k))
 
   /** Top-k of every query shape via the WAND pipeline ([[wandSearch]])
-    * with the kernel on the cluster. Falls back to [[searchCollected]]
-    * only when the dead set exceeds its driver budget or a filtered
-    * query's over-pull exceeds 16 384 candidates. Returns the same docs
+    * with the kernel on the cluster, a probe of the segment store: no SQL
+    * execution. Falls back to [[searchCollected]] only when the dead set
+    * exceeds its driver budget or a filtered query's over-pull exceeds
+    * 16 384 candidates. Returns the same docs
     * and scores as the exhaustive scorer — asserted by the differential
     * spec. */
   def searchWand(q: FtsQuery): Seq[SearchResult] = {
@@ -726,7 +736,8 @@ class FtsIndex(spark: SparkSession, root: String) {
     val weight = alts.flatten.map(a => a -> altDfs(a).map(idfOf(nDocs, _)).sum)
       .toMap
     val kernel: Int => Seq[Wand.Scored] = lk.blocks(fts, dfs) match {
-      case Some(blocksOf) => wandLocal(alts, blocksOf, weight, _, dead)
+      case Some(blocksOf) =>
+        wandTopK(alts, blocksOf, weight, avgdlByField, _, dead)
       case None => wandCluster(alts, weight, _, dead)
     }
 
@@ -760,53 +771,16 @@ class FtsIndex(spark: SparkSession, root: String) {
       e.repo, e.path, e.lang, e.content, e.ls, s.score)))
   }
 
-  /** The kernel on the driver over blocks in hand: shards run in turn so
-    * the θ floor carries across them — the cross-shard pruning the
-    * cluster kernel cannot do (nextDown keeps exact-score ties alive for
-    * the doc_id tie-break). */
-  private def wandLocal(alts: Seq[Seq[FieldQ]],
-                        blocksOf: FieldQ => Array[SegmentBlock],
-                        weight: Map[FieldQ, Double], k: Int,
-                        dead: Wand.DeadSet): Seq[Wand.Scored] = {
-    val all = alts.flatten.distinct.map(a => a -> blocksOf(a)).toMap
-    val shards = all.values.flatMap(_.map(_.shard)).toSeq.distinct.sorted
-    val collected = scala.collection.mutable.ArrayBuffer.empty[Wand.Scored]
-    var floor = 0.0
-    shards.foreach { sh =>
-      collected ++= shardTopK(alts, all(_).filter(_.shard == sh), weight,
-        avgdlByField, k, floor, dead)
-      if (collected.size >= k) {
-        val kth = collected.sortBy(s => (-s.score, s.doc)).apply(k - 1)
-        floor = Math.nextDown(kth.score)
-      }
-    }
-    collected.sortBy(s => (-s.score, s.doc)).take(k).toSeq
-  }
-
-  /** The kernel on the cluster: per-shard WAND in a `flatMapGroups` over
-    * the shard key (shards have disjoint doc spaces, and delta generations
-    * are ordinary shards in the (1000+gen) namespace), a phrase aligned
-    * from the shard's own blocks, then a driver merge of the tiny
-    * per-shard top-k lists. A non-empty dead set rides the snapshot's one
-    * broadcast ([[deadBc]]) — it can reach tens of MB under heavy churn. */
+  /** The kernel on the cluster: [[wandTopK]] in each segment-store
+    * partition (whole shards, so a phrase aligns from the partition's own
+    * blocks), then a driver merge of the per-partition top-k lists. A
+    * non-empty dead set rides the snapshot's one broadcast ([[deadBc]]) —
+    * it can reach tens of MB under heavy churn. */
   private def wandCluster(alts: Seq[Seq[FieldQ]], weight: Map[FieldQ, Double],
                           k: Int, dead: Wand.DeadSet): Seq[Wand.Scored] = {
     val deadB = if (dead.isEmpty) None else deadBc
-    val avgdl = avgdlByField
-    segments.where(termPredicate(alts.map(Node)))
-      .groupByKey(_.shard)
-      .flatMapGroups { (_: Int, it: Iterator[SegmentBlock]) =>
-        val byFt = it.toArray.groupBy(b => (b.field, b.term))
-          .view.mapValues(_.sortBy(_.first_doc)).toMap
-        def termBlocks(f: String, t: String) =
-          byFt.getOrElse((f, t), Array.empty[SegmentBlock])
-        shardTopK(alts, {
-          case TermQ(f, t) => termBlocks(f, t)
-          case PhraseQ(f, ts) => Wand.phraseBlocks(f, ts.map(termBlocks(f, _)))
-          case _ => Array.empty[SegmentBlock]
-        }, weight, avgdl, k, 0.0,
-          deadB.fold(Wand.DeadSet.empty)(_.value)).iterator
-      }.collect().sortBy(s => (-s.score, s.doc)).take(k).toSeq
+    segmentStore.lookup(SnapshotStore.wandLookup(alts, weight, avgdlByField,
+      k, deadB)).sortBy(s => (-s.score, s.doc)).take(k).toSeq
   }
 }
 
@@ -944,6 +918,31 @@ object FtsIndex {
     case TermQ(_, t) => Seq(t)
     case PhraseQ(_, ts) => ts
     case _ => Nil
+  }
+
+  /** The WAND kernel over blocks in hand: the shards of `blocksOf` run
+    * in turn so the θ floor carries across them (nextDown keeps
+    * exact-score ties alive for the doc_id tie-break). Runs on the driver
+    * over the warm cache's blocks and in each segment-store partition on
+    * the cluster. Returns the top k ordered by (score desc, doc asc). */
+  private[query] def wandTopK(alts: Seq[Seq[FieldQ]],
+                              blocksOf: FieldQ => Array[SegmentBlock],
+                              weight: Map[FieldQ, Double],
+                              avgdl: Map[String, Double], k: Int,
+                              dead: Wand.DeadSet): Seq[Wand.Scored] = {
+    val all = alts.flatten.distinct.map(a => a -> blocksOf(a)).toMap
+    val shards = all.values.flatMap(_.map(_.shard)).toSeq.distinct.sorted
+    val collected = scala.collection.mutable.ArrayBuffer.empty[Wand.Scored]
+    var floor = 0.0
+    shards.foreach { sh =>
+      collected ++= shardTopK(alts, all(_).filter(_.shard == sh), weight,
+        avgdl, k, floor, dead)
+      if (collected.size >= k) {
+        val kth = collected.sortBy(s => (-s.score, s.doc)).apply(k - 1)
+        floor = Math.nextDown(kth.score)
+      }
+    }
+    collected.sortBy(s => (-s.score, s.doc)).take(k).toSeq
   }
 
   /** One shard's top-k over AND-of-alternatives ([[Wand.topKShard]]): a

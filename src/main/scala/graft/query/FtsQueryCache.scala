@@ -22,9 +22,11 @@ import graft.index.FtsSchema._
   *     job): when a term's posting list exceeds `maxDfCached`
   *     (stopword-grade, df ~ N), or the query's terms or summed df exceed
   *     `maxQueryTerms` / `maxQueryDf`, no block is collected to the
-  *     driver and the same pipeline runs its kernel on the cluster. This
-  *     is what makes the cache safe against a 100 TB index: only bounded
-  *     posting lists ever land in driver memory.
+  *     driver and the same pipeline runs its kernel on the cluster: one
+  *     `runJob` probing every segment-store partition, each partition's
+  *     top-k merged here. This is what makes the cache safe against a
+  *     100 TB index: only bounded posting lists ever land in driver
+  *     memory.
   *   - fuzzy/regex dictionary expansions per alternative;
   *   - phrase alignments per (phrase, snapshot);
   *   - doc metadata (repo/path/lang/lines) and doc content rows by doc_id,

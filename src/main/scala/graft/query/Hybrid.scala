@@ -15,13 +15,14 @@ import org.apache.spark.sql.DataFrame
   * query vector on). Cosine top-k goes through the same bucketed plans as
   * the `ann_*` contract queries.
   *
-  * SERVING COMPOSITION (round 5): the production overloads take the FTS
-  * half as a STRATEGY — default [[ReloadingFtsIndex.searchCached]], the
-  * driver warm cache, whose WAND pipeline runs its kernel on the cluster
-  * when a df gate fails and falls back to the exhaustive scorer only past
-  * the dead-set or over-pull budget — so a warm hybrid query is
-  * warm on BOTH halves (the reference's ~120 ms hybrid total,
-  * docs/query-guide.md:501, is warm-daemon FTS + HNSW). The exact
+  * SERVING COMPOSITION (round 5): [[searchWith]] takes the FTS half as a
+  * STRATEGY; the production overloads pass
+  * [[ReloadingFtsIndex.searchCached]], the driver warm cache, whose WAND
+  * pipeline runs its kernel on the cluster when a df gate fails and
+  * falls back to the exhaustive scorer only past the dead-set or
+  * over-pull budget — so a warm hybrid query is warm on BOTH halves
+  * (the reference's ~120 ms hybrid total, docs/query-guide.md:501, is
+  * warm-daemon FTS + HNSW). The exact
   * [[FtsIndex.searchCollected]] scan remains the contract mode.
   */
 object Hybrid {
@@ -66,42 +67,6 @@ object Hybrid {
     runBoth(() => idx.searchCollected(q),
       () => semanticTopK(emb, queryVec, kSemantic))
 
-  /** Contract-mode FTS half + IVF-index semantic half: the semantic side
-    * probes a prebuilt IVF index through its warm cell cache —
-    * driver-side probe selection, one pruned job per COLD cell, zero jobs
-    * hot (the reference's ~20 ms HNSW analog, docs/query-guide.md:76). */
-  def search(idx: FtsIndex, ann: graft.ops.AnnIndex, queryVec: Array[Float],
-             q: FtsQuery, kSemantic: Int): HybridResults =
-    search(idx, ann, queryVec, q, kSemantic, warmSemantic = true)
-
-  /** As above, choosing the semantic serving path explicitly:
-    * `warmSemantic = false` scores the probed cells on the cluster
-    * ([[graft.ops.AnnIndex.topK]]) instead of the driver cell cache —
-    * for vector sets whose cells exceed the driver budget. */
-  def search(idx: FtsIndex, ann: graft.ops.AnnIndex, queryVec: Array[Float],
-             q: FtsQuery, kSemantic: Int,
-             warmSemantic: Boolean): HybridResults =
-    searchWith(qq => idx.searchCollected(qq), ann, queryVec, q, kSemantic,
-      warmSemantic)
-
-  /** PRODUCTION hybrid: warm on both halves. The FTS half serves through
-    * [[ReloadingFtsIndex.searchCached]] (the warm cache's WAND pipeline,
-    * reloading on index movement); the
-    * semantic half through the IVF index's warm cell cache. Hot queries
-    * touch zero Spark jobs on either side. */
-  def search(rel: ReloadingFtsIndex, ann: graft.ops.AnnIndex,
-             queryVec: Array[Float], q: FtsQuery,
-             kSemantic: Int): HybridResults =
-    search(rel, ann, queryVec, q, kSemantic, warmSemantic = true)
-
-  /** As above with an explicit semantic serving path (see the
-    * `warmSemantic` note on the contract-mode overload). */
-  def search(rel: ReloadingFtsIndex, ann: graft.ops.AnnIndex,
-             queryVec: Array[Float], q: FtsQuery, kSemantic: Int,
-             warmSemantic: Boolean): HybridResults =
-    searchWith(qq => rel.searchCached(qq), ann, queryVec, q, kSemantic,
-      warmSemantic)
-
   /** Fully reloading production hybrid: BOTH halves track their on-disk
     * roots — the FTS half through [[ReloadingFtsIndex]], the semantic
     * half through [[graft.ops.ReloadingAnnIndex]] (each staleness check
@@ -109,7 +74,7 @@ object Hybrid {
   def search(rel: ReloadingFtsIndex, ann: graft.ops.ReloadingAnnIndex,
              queryVec: Array[Float], q: FtsQuery,
              kSemantic: Int): HybridResults =
-    search(rel, ann.index, queryVec, q, kSemantic, warmSemantic = true)
+    searchWith(qq => rel.searchCached(qq), ann.index, queryVec, q, kSemantic)
 
   /** Fully reloading production hybrid with the reference's semantic
     * query knobs (`--min-score` floor, `--accuracy` profile). The ANN

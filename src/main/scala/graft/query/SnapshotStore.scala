@@ -3,28 +3,33 @@ package graft.query
 import scala.reflect.ClassTag
 
 import org.apache.spark.{SparkException, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 import graft.index.FtsSchema.SegmentBlock
 
 /** A key-addressed, persisted in-memory store over one of a snapshot's
-  * relations (segments, alive docs): partition i of the store holds
-  * partition i of the relation as ONE lookup structure `P` — a (field,
-  * term) hash map, a doc_id hash map. A lookup is one
+  * relations (segments, alive docs), and the only in-memory copy of it:
+  * each partition of the store is ONE lookup structure `P` — a (field,
+  * term) hash map over one segment directory's whole shards, a doc_id
+  * hash map over one split of the docs. A lookup is one
   * `SparkContext.runJob` of a plain Scala closure over the store's
   * partitions: no Catalyst analysis, optimization or codegen, and no
-  * per-row predicate over the cached relation (the Tantivy regime of the
+  * per-row predicate over a relation (the Tantivy regime of the
   * reference daemon: a doc fetch, not a query plan — SURVEY.md §2.4).
+  * The cluster WAND kernel is such a lookup too
+  * ([[SnapshotStore.wandLookup]]), which is why a segment partition holds
+  * whole shards.
   * [[graft.ops.AnnIndex.topK]] serves the same way. The term dictionary
   * lives on the driver instead ([[TermDict]]).
   *
   * The store RDD is created on first use and locally checkpointed
   * (`localCheckpoint()`: persisted memory-and-disk, lineage cut once its
-  * first job has built every partition), so a lookup's task carries the
-  * checkpointed partitions and the probe, not the relation's scan plan.
-  * [[FtsIndex.warm]] materializes it in the job that also fills the
-  * relation's columnar cache. [[release]] unpersists it.
+  * first job has built every partition from Parquet), so a lookup's task
+  * carries the checkpointed partitions and the probe, not the relation's
+  * scan plan. [[FtsIndex.warm]] materializes it; [[release]] unpersists
+  * it.
   *
   * A checkpointed partition cannot be recomputed: a lookup whose blocks
   * are gone fails with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`. A released
@@ -109,20 +114,23 @@ private[query] object SnapshotStore {
   final case class DocEntry(repo: String, path: String, lang: String,
                             ls: Int, le: Long, content: String)
 
-  def segmentParts(segments: Dataset[SegmentBlock])
+  /** One partition per segment directory (each holds whole shards), each
+    * a (field, term) map of the term's blocks. */
+  def segmentParts(dirs: Seq[Dataset[SegmentBlock]])
       : RDD[java.util.HashMap[(String, String), Array[SegmentBlock]]] =
-    segments.rdd.mapPartitions({ blocks =>
-      val acc = new java.util.HashMap[(String, String),
-        scala.collection.mutable.ArrayBuffer[SegmentBlock]]()
-      blocks.foreach { b =>
-        acc.computeIfAbsent((b.field, b.term),
-          _ => scala.collection.mutable.ArrayBuffer.empty) += b
+    dirs.head.sparkSession.sparkContext.union(dirs.map(_.rdd.coalesce(1)))
+      .mapPartitions { blocks =>
+        val acc = new java.util.HashMap[(String, String),
+          scala.collection.mutable.ArrayBuffer[SegmentBlock]]()
+        blocks.foreach { b =>
+          acc.computeIfAbsent((b.field, b.term),
+            _ => scala.collection.mutable.ArrayBuffer.empty) += b
+        }
+        val out = new java.util.HashMap[(String, String),
+          Array[SegmentBlock]](acc.size * 2)
+        acc.forEach((k, v) => out.put(k, v.toArray))
+        Iterator.single(out)
       }
-      val out = new java.util.HashMap[(String, String), Array[SegmentBlock]](
-        acc.size * 2)
-      acc.forEach((k, v) => out.put(k, v.toArray))
-      Iterator.single(out)
-    }, preservesPartitioning = true)
 
   def docParts(docs: DataFrame)
       : RDD[java.util.HashMap[java.lang.Long, DocEntry]] = {
@@ -154,6 +162,28 @@ private[query] object SnapshotStore {
       : java.util.HashMap[(String, String), Array[SegmentBlock]] =>
         Array[((String, String), Array[SegmentBlock])] = part =>
     fts.flatMap(ft => Option(part.get(ft)).map(ft -> _))
+
+  /** The partition's top k of the query ([[FtsIndex.wandTopK]] over its
+    * whole shards): a term's cursor is its blocks sorted by (shard,
+    * first_doc), a phrase's is aligned from its terms' blocks
+    * ([[Wand.phraseBlocks]]); the dead set comes from the snapshot's
+    * broadcast. */
+  def wandLookup(alts: Seq[Seq[FtsIndex.FieldQ]],
+                 weight: Map[FtsIndex.FieldQ, Double],
+                 avgdl: Map[String, Double], k: Int,
+                 dead: Option[Broadcast[Wand.DeadSet]])
+      : java.util.HashMap[(String, String), Array[SegmentBlock]] =>
+        Array[Wand.Scored] = { part =>
+    def termBlocks(f: String, t: String): Array[SegmentBlock] =
+      Option(part.get((f, t))).fold(Array.empty[SegmentBlock])(
+        _.sortBy(b => (b.shard, b.first_doc)))
+    FtsIndex.wandTopK(alts, {
+      case FtsIndex.TermQ(f, t) => termBlocks(f, t)
+      case FtsIndex.PhraseQ(f, ts) =>
+        Wand.phraseBlocks(f, ts.map(termBlocks(f, _)))
+      case _ => Array.empty[SegmentBlock]
+    }, weight, avgdl, k, dead.fold(Wand.DeadSet.empty)(_.value)).toArray
+  }
 
   /** (doc_id, row) of every id present in the partition; content is
     * dropped unless asked for. */

@@ -6,11 +6,12 @@ import graft.index.FtsSchema.SegmentBlock
 /** Block-max WAND top-k scorer (Ding & Suel BMW, public algorithm; the
   * basis of Tantivy/Lucene top-k pruning — north-star flagship operator).
   *
-  * The kernel of the one top-k pipeline ([[FtsIndex.wandSearch]]), which
-  * runs it per shard, INSIDE a `flatMapGroups` on the cluster or over the
-  * warm cache's blocks on the driver (shard doc-id spaces are disjoint
-  * and blocks never cross shards, so each shard is an independent
-  * doc-aligned stream); per-shard top-k results merge into a global top-k.
+  * The kernel of the one top-k pipeline ([[FtsIndex.wandSearch]]), run
+  * per shard by [[FtsIndex.wandTopK]]: over the warm cache's blocks on the
+  * driver, or in each partition of the segment store on the cluster, where
+  * a partition holds whole shards (shard doc-id spaces are disjoint and
+  * blocks never cross shards, so each shard is an independent doc-aligned
+  * stream); per-shard top-k results merge into a global top-k.
   * Posting blocks are decoded LAZILY: a block whose upper bound
   * idf * bm25(max_tf, min_dl) cannot beat the running threshold θ is
   * skipped without ever being decompressed — that is the whole point of

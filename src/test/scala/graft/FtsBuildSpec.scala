@@ -149,4 +149,21 @@ class FtsBuildSpec extends AnyFunSuite {
       s"the caller's session saw $key set: $seen")
     assert(spark.conf.getOption(key).isEmpty)
   }
+
+  test("a source with a duplicated (repo, path) is rejected before any " +
+       "docs file is written") {
+    val root = TestSpark.tempDir("dupkey")
+    val docs = Fixtures.corpusA
+    val dup = docs(1).copy(content = "def other(): return 1")
+    val e = intercept[IllegalArgumentException] {
+      FtsIndexBuilder.build(spark, TestSpark.docsDf(docs :+ dup), root,
+        FtsIndexBuilder.Config(nShards = 3, segmentPartitions = 5))
+    }
+    assert(e.getMessage.contains(dup.repo) && e.getMessage.contains(dup.path),
+      e.getMessage)
+    val written = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try assert(!written.anyMatch(_.endsWith("docs/_SUCCESS")),
+      "no docs table may be committed")
+    finally written.close()
+  }
 }

@@ -30,48 +30,57 @@ class FtsQueryCacheSpec extends AnyFunSuite {
     }
   }
 
-  /** Counts SQL executions finished between construction and [[count]]
-    * (those `counts` selects):
-    * the listener bus is asynchronous, so [[count]] runs a sentinel
-    * execution and waits until it is delivered (events arrive in order). */
-  private final class SqlExecutions(
-      counts: QueryExecution => Boolean = _ => true)
-      extends QueryExecutionListener {
+  /** Counts SQL executions finished between construction and [[count]].
+    * The listener bus is asynchronous and delivers events in order, so
+    * both ends run a sentinel execution and wait until it is delivered:
+    * what finished before construction is delivered before the first
+    * sentinel and never counted. */
+  private final class SqlExecutions extends QueryExecutionListener {
     private val seen = new java.util.concurrent.atomic.AtomicInteger
-    @volatile private var sentinelSeen = false
+    @volatile private var sentinelsSeen = 0
     private val sentinelRows = 7919L
     override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
       if (qe.analyzed.toString.contains(s"Range (0, $sentinelRows"))
-        sentinelSeen = true
-      else if (counts(qe)) seen.incrementAndGet()
+        sentinelsSeen += 1
+      else if (sentinelsSeen == 1) seen.incrementAndGet()
     override def onFailure(f: String, qe: QueryExecution,
-                           e: Exception): Unit = seen.incrementAndGet()
+                           e: Exception): Unit =
+      if (sentinelsSeen == 1) seen.incrementAndGet()
     spark.listenerManager.register(this)
+    sentinel(1)
 
-    def count(): Int = {
+    /** Run a sentinel and wait until the `n`-th one is delivered. */
+    private def sentinel(n: Int): Unit = {
       spark.range(sentinelRows).count()
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      while (sentinelsSeen < n && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      if (sentinelsSeen < n) spark.listenerManager.unregister(this)
+      assert(sentinelsSeen >= n, "sentinel SQL execution never delivered")
+    }
+
+    def count(): Int = {
+      sentinel(2)
       spark.listenerManager.unregister(this)
-      assert(sentinelSeen, "sentinel SQL execution never delivered")
       seen.get()
     }
   }
 
+  private val shapes = Seq(
+    "exact" -> FtsQuery("authenticate", limit = 5),
+    "multi" -> FtsQuery("username password", limit = 5),
+    "phrase" -> FtsQuery("login_user", limit = 5),
+    "fuzzy" -> FtsQuery("authenticat", editDistance = 1, limit = 5),
+    "regex" -> FtsQuery("auth.*", useRegex = true, limit = 5),
+    "case" -> FtsQuery("Configuration", caseSensitive = true, limit = 5),
+    "lang" -> FtsQuery("def", languages = Seq("python"), limit = 5),
+    "path" -> FtsQuery("def", pathFilters = Seq("src/*"), limit = 5),
+    "limit=0" -> FtsQuery("password", limit = 0),
+    "routed" -> FtsQuery("def", limit = 0, languages = Seq("python")))
+
   test("a cold cached query of every shape runs zero SQL executions and " +
        "equals the exhaustive path; cool() releases the stores") {
     val root = freshIndex(Fixtures.corpusA ++ Fixtures.corpusB)
-    val shapes = Seq(
-      "exact" -> FtsQuery("authenticate", limit = 5),
-      "multi" -> FtsQuery("username password", limit = 5),
-      "phrase" -> FtsQuery("login_user", limit = 5),
-      "fuzzy" -> FtsQuery("authenticat", editDistance = 1, limit = 5),
-      "regex" -> FtsQuery("auth.*", useRegex = true, limit = 5),
-      "case" -> FtsQuery("Configuration", caseSensitive = true, limit = 5),
-      "lang" -> FtsQuery("def", languages = Seq("python"), limit = 5),
-      "path" -> FtsQuery("def", pathFilters = Seq("src/*"), limit = 5),
-      "limit=0" -> FtsQuery("password", limit = 0),
-      "routed" -> FtsQuery("def", limit = 0, languages = Seq("python")))
     // the expected answers come from a separate snapshot, so the served
     // one's stores start cold too
     val ref = new FtsIndex(spark, root)
@@ -104,40 +113,26 @@ class FtsQueryCacheSpec extends AnyFunSuite {
       "cool() must unpersist every store")
   }
 
-  /** Whether an execution's plan reads a `docs` relation (base or delta). */
-  private def scansDocs(qe: QueryExecution): Boolean =
-    qe.analyzed.collectLeaves().exists {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.exists(_.toString.stripSuffix("/")
-              .endsWith("/docs"))
-          case _ => false
-        }
-      case _ => false
+  test("a warm index's searchWand runs zero SQL executions for every " +
+       "shape, and so does a cache whose df gate sends every query to " +
+       "the cluster kernel") {
+    val root = freshIndex(Fixtures.corpusA ++ Fixtures.corpusB)
+    val ref = new FtsIndex(spark, root)
+    val expected = shapes.map { case (n, q) => n -> ref.searchCollected(q) }
+    expected.foreach { case (n, ex) => assert(ex.nonEmpty, s"$n matches") }
+    val idx = new FtsIndex(spark, root).warm()
+    val cache = new FtsQueryCache(idx, maxDfCached = 0)
+    val sql = new SqlExecutions
+    val got = shapes.map { case (n, q) =>
+      n -> (idx.searchWand(q), cache.search(q)) }
+    assert(sql.count() === 0,
+      "the cluster WAND kernel must not plan or run any SQL")
+    assert(cache.stats.clusterRouted === shapes.size &&
+      cache.stats.blockMisses === 0, "every query ran the cluster kernel")
+    got.zip(expected).foreach { case ((n, (wand, cached)), (_, ex)) =>
+      assertSame(wand, ex, s"searchWand $n")
+      assertSame(cached, ex, s"cluster-routed cache $n")
     }
-
-  test("searchWand serves phrase and filtered queries with the WAND " +
-       "kernel: no SQL execution scans the docs relation") {
-    val idx = new FtsIndex(spark,
-      freshIndex(Fixtures.corpusA ++ Fixtures.corpusB)).warm()
-    val qs = Seq(FtsQuery("login_user", limit = 5),
-      FtsQuery("def", languages = Seq("python"), limit = 3),
-      FtsQuery("password", pathFilters = Seq("src/*"), limit = 0))
-    val expected = qs.map(idx.searchCollected)
-    expected.foreach(ex => assert(ex.nonEmpty))
-    // let the oracle's executions reach the (asynchronous) listener bus
-    new SqlExecutions(_ => false).count()
-    val docScans = new SqlExecutions(scansDocs)
-    val got = qs.map(idx.searchWand)
-    assert(docScans.count() === 0,
-      "searchWand must not plan the exhaustive scorer's docs scan")
-    got.zip(expected).zip(qs).foreach { case ((g, ex), q) =>
-      assertSame(g, ex, q.toString) }
-    // the detector sees the exhaustive scorer's docs scan
-    val control = new SqlExecutions(scansDocs)
-    idx.searchCollected(qs.head)
-    assert(control.count() > 0)
     idx.cool()
   }
 
@@ -147,8 +142,11 @@ class FtsQueryCacheSpec extends AnyFunSuite {
       freshIndex(Fixtures.corpusA ++ Fixtures.corpusB)).warm()
     import org.apache.spark.sql.classic.ClassicConversions._
     val cm = spark.sharedState.cacheManager
-    assert(cm.lookupCachedData(idx.dict).isEmpty)
-    assert(cm.lookupCachedData(idx.segments).nonEmpty, "warm() caches segments")
+    for ((name, rel) <- Seq("dict" -> idx.dict,
+                            "segments" -> idx.segments.toDF(),
+                            "docs" -> idx.docs))
+      assert(cm.lookupCachedData(rel).isEmpty,
+        s"warm() caches none of dict, segments and docs: $name is cached")
     assert(idx.searchWand(FtsQuery("authenticate", limit = 3)).nonEmpty)
     idx.cool()
   }

@@ -84,10 +84,11 @@ class FtsRound5Spec extends AnyFunSuite {
         FtsQuery("def handler", limit = 5),
         FtsQuery("authentcate", editDistance = 1, limit = 5))
       shapes.foreach { q =>
-        val warm = Hybrid.search(rel, ann, qv, q, kSemantic = 7)
+        val warm = Hybrid.searchWith(rel.searchCached, ann, qv, q,
+          kSemantic = 7)
         val contract =
-          Hybrid.search(rel.index, ann, qv, q, kSemantic = 7,
-            warmSemantic = false)
+          Hybrid.searchWith(rel.index.searchCollected, ann, qv, q,
+            kSemantic = 7, warmSemantic = false)
         assert(warm.fts.map(_.doc_id) === contract.fts.map(_.doc_id),
           s"warm hybrid FTS docs diverged for '${q.text}'")
         warm.fts.zip(contract.fts).foreach { case (a, b) =>
@@ -102,7 +103,8 @@ class FtsRound5Spec extends AnyFunSuite {
         Fixtures.Doc("test_repo", "src/hybrid_new.py", "h1" * 20, "python",
           "def fresh(): return authenticate_user()", Nil))), root, cfg)
       val q = FtsQuery("authenticate", limit = 5)
-      val warm = Hybrid.search(rel, ann, qv, q, kSemantic = 7)
+      val warm = Hybrid.searchWith(rel.searchCached, ann, qv, q,
+        kSemantic = 7)
       val cluster = rel.index.searchCollected(q)
       assert(warm.fts.map(_.doc_id) === cluster.map(_.doc_id),
         "warm hybrid diverged from the cluster path under live deltas")

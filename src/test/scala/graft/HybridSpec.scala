@@ -60,7 +60,7 @@ class HybridSpec extends AnyFunSuite {
       FtsIndexBuilder.build(spark, TestSpark.docsDf(Fixtures.corpusA), root,
         FtsIndexBuilder.Config(nShards = 2, segmentPartitions = 4))
       val idx = new FtsIndex(spark, root)
-      val r = Hybrid.search(idx, ann, queries.head._2,
+      val r = Hybrid.searchWith(idx.searchCollected, ann, queries.head._2,
         FtsQuery("authenticate", limit = 5), kSemantic = 10)
       assert(r.fts.nonEmpty)
       assert(r.semantic.size === 10)

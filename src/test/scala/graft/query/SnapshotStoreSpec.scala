@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.corpus.Fixtures
-import graft.index.FtsIndexBuilder
+import graft.index.{FtsDeltas, FtsIndexBuilder}
 
 /** The serving side's Spark footprint: the term dictionary is a driver
   * structure (df and fuzzy/regex expansion start no job), the segment and
@@ -142,5 +142,52 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(!sc.getPersistentRDDs.contains(lost.id))
     assertCold(idx, FtsQuery("password", limit = 5))
     idx.cool()
+  }
+
+  test("the segment store has one partition per segment directory, and " +
+       "no shard's blocks sit in two partitions: base groups, a delta, a " +
+       "fold") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    val cfg4 = FtsIndexBuilder.Config(nShards = 4, shardGroups = 2,
+      segmentPartitions = 4)
+    val r = TestSpark.tempDir("aligned")
+    FtsIndexBuilder.build(spark,
+      TestSpark.docsDf(Fixtures.corpusA ++ Fixtures.corpusB), r, cfg4)
+    def upsert(i: Int): Unit = FtsDeltas.upsert(spark, TestSpark.docsDf(Seq(
+      Fixtures.Doc("test_repo", s"src/aligned_$i.py", i.toString * 40,
+        "python", s"def f$i(): return authenticate(user_$i)", Nil))), r, cfg4)
+    def check(what: String, nDirs: Int): Unit = {
+      val idx = new FtsIndex(spark, r).warm()
+      val hfs = FtsIndexBuilder.fs(spark, r)
+      def dirs(glob: String) = Option(hfs.globStatus(
+        new Path(s"${idx.versionDir}/$glob"))).fold(0)(_.count(_.isDirectory))
+      assert(dirs("segments/*") + dirs("deltas/d*/segments") === nDirs, what)
+      val store = idx.segmentStore.rdd
+      assert(store.getNumPartitions === nDirs,
+        s"$what: one store partition per segment directory")
+      val partsOf = store.mapPartitionsWithIndex((i, it) =>
+        it.flatMap(_.values.asScala.flatMap(_.map(_.shard))).map(_ -> i))
+        .collect().distinct.groupBy(_._1)
+      assert(partsOf.values.flatMap(_.map(_._2)).toSet.size === nDirs,
+        s"$what: every partition holds a shard")
+      partsOf.foreach { case (sh, ps) =>
+        assert(ps.length === 1, s"$what: shard $sh sits in partitions " +
+          ps.map(_._2).mkString(", "))
+      }
+      val q = FtsQuery("authenticate", limit = 20)
+      val got = idx.searchWand(q)
+      val ex = new FtsIndex(spark, r).searchCollected(q)
+      assert(ex.nonEmpty && got.map(_.doc_id) === ex.map(_.doc_id), what)
+      got.zip(ex).foreach { case (a, b) =>
+        assert(math.abs(a.score - b.score) < 1e-8, what) }
+      idx.cool()
+    }
+    check("base", 2)
+    upsert(1)
+    check("one upsert", 3)
+    upsert(2)
+    assert(FtsDeltas.fold(spark, r, cfg4).isDefined)
+    check("two upserts and a fold", 3)
   }
 }
