@@ -40,11 +40,11 @@ object FtsDeltas {
   private def currentDir(spark: SparkSession, root: String): String =
     FtsIndexBuilder.currentVersionDir(spark, root)
 
-  /** Sorted live delta-generation numbers of an index root (the ONE
-    * owner of the d<N> naming scheme — nextGen/fold/the streaming sink
-    * all derive from it). */
-  def liveGenerations(spark: SparkSession, root: String): Seq[Int] = {
-    val vDir = currentDir(spark, root)
+  /** Sorted delta-generation numbers under a version dir: the ONE
+    * listing of the d<N> naming scheme — snapshots, fingerprints,
+    * nextGen, fold and the streaming sink all derive from it. */
+  private[graft] def generations(spark: SparkSession,
+                                 vDir: String): Seq[Int] = {
     val hfs = FtsIndexBuilder.fs(spark, vDir)
     val d = new Path(s"$vDir/deltas")
     if (!hfs.exists(d)) Nil
@@ -52,14 +52,12 @@ object FtsDeltas {
       .filter(_.matches("d\\d+")).map(_.drop(1).toInt).sorted.toSeq
   }
 
-  private def nextGen(spark: SparkSession, vDir: String): Int = {
-    val hfs = FtsIndexBuilder.fs(spark, vDir)
-    val d = new Path(s"$vDir/deltas")
-    if (!hfs.exists(d)) 1
-    else hfs.listStatus(d).map(_.getPath.getName)
-      .filter(_.matches("d\\d+")).map(_.drop(1).toInt)
-      .reduceOption(_ max _).getOrElse(0) + 1
-  }
+  /** Sorted live delta-generation numbers of an index root. */
+  def liveGenerations(spark: SparkSession, root: String): Seq[Int] =
+    generations(spark, currentDir(spark, root))
+
+  private def nextGen(spark: SparkSession, vDir: String): Int =
+    generations(spark, vDir).lastOption.getOrElse(0) + 1
 
   /** Delta doc-id assignment for one generation, mirroring stageDocs'
     * shard scheme inside the delta's own namespace: sub-shard =
@@ -101,7 +99,8 @@ object FtsDeltas {
   /** Driver-side parquet row count from file footers — zero Spark jobs
     * (the 2^28 guard must not recompute the batch lineage every streaming
     * microbatch, ADVICE r03 #5). */
-  private def parquetRowCount(spark: SparkSession, dir: String): Long = {
+  private[graft] def parquetRowCount(spark: SparkSession,
+                                     dir: String): Long = {
     val hfs = FtsIndexBuilder.fs(spark, dir)
     val conf = spark.sparkContext.hadoopConfiguration
     hfs.listStatus(new Path(dir)).iterator
@@ -156,11 +155,12 @@ object FtsDeltas {
     val cfg = withIndexNormRegime(spark, vDir, cfg0)
     val hfs = FtsIndexBuilder.fs(spark, vDir)
     val gen = nextGen(spark, vDir)
-    // stage the WHOLE generation under a WRITER-UNIQUE name deltaDirs
-    // ignores, publish with one atomic rename: readers never see a torn
-    // half-generation, and two concurrent upserts can never interleave
-    // writes into one staging dir (whichever publishes d<gen> second
-    // fails loudly at the Rename.NONE below and cleans up its own stage)
+    // stage the WHOLE generation under a WRITER-UNIQUE name the
+    // generation listing ignores, publish with one atomic rename: readers
+    // never see a torn half-generation, and two concurrent upserts can
+    // never interleave writes into one staging dir (whichever publishes
+    // d<gen> second fails loudly at the Rename.NONE below and cleans up
+    // its own stage)
     val tmpDir =
       s"$vDir/deltas/up.tmp.$gen.${java.util.UUID.randomUUID.toString.take(8)}"
     try {
@@ -242,12 +242,8 @@ object FtsDeltas {
       .option("parquet.enable.dictionary#dl_bytes", "false")
       .option("parquet.enable.dictionary#pos_bytes", "false")
       .parquet(s"$dDir/segments")
-    val cmaskU = udf((t: String) => graft.functions.Distance.charMask(t))
-    spark.read.parquet(s"$dDir/segments")
-      .groupBy("field", "term")
-      .agg(sum("n").as("df"), sum("sum_tf").as("cf"))
-      .withColumn("cmask", cmaskU(col("term")))
-      .write.mode("overwrite").parquet(s"$dDir/dict")
+    FtsIndexBuilder.writeDict(spark.read.parquet(s"$dDir/segments"),
+      math.max(cfg.segmentPartitions / 4, 1), s"$dDir/dict")
   }
 
   /** TIERED compaction: fold every delta generation into ONE equivalent
@@ -283,10 +279,7 @@ object FtsDeltas {
     val vDir = currentDir(spark, root)
     val cfg = withIndexNormRegime(spark, vDir, cfg0)
     val hfs = FtsIndexBuilder.fs(spark, vDir)
-    val deltaRoot = new Path(s"$vDir/deltas")
-    if (!hfs.exists(deltaRoot)) return None
-    val gens = hfs.listStatus(deltaRoot).map(_.getPath.getName)
-      .filter(_.matches("d\\d+")).map(_.drop(1).toInt).sorted.toSeq
+    val gens = generations(spark, vDir)
     if (gens.length <= 1) return None
     val gNew = gens.max + 1
 
@@ -306,8 +299,9 @@ object FtsDeltas {
         if (a.isEmpty) None else Some(a)
       }
 
-    // stage the folded generation under a writer-unique name deltaDirs
-    // ignores (a concurrent fold/upsert must never share a staging dir)
+    // stage the folded generation under a writer-unique name the
+    // generation listing ignores (a concurrent fold/upsert must never
+    // share a staging dir)
     val tmpName = s"fold.tmp.$gNew.${java.util.UUID.randomUUID.toString.take(8)}"
     val tmpDir = s"$vDir/deltas/$tmpName"
     alive.foreach { a =>

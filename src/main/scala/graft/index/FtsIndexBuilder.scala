@@ -253,6 +253,17 @@ object FtsIndexBuilder {
     (todo, skipped)
   }
 
+  /** The one writer of a dictionary dir ([[DictRow]]): df and cf of each
+    * (field, term) summed over the given posting blocks, hash-partitioned
+    * into `parts` files and sorted by term within each. */
+  private[index] def writeDict(segments: DataFrame, parts: Int,
+                               dir: String): Unit =
+    segments.groupBy("field", "term")
+      .agg(sum("n").as("df"), sum("sum_tf").as("cf"))
+      .repartition(parts, col("field"), col("term"))
+      .sortWithinPartitions("field", "term")
+      .write.mode("overwrite").parquet(dir)
+
   /** Stage 3: global dict, corpus stats, atomic current-pointer swap.
     * Returns nDocs. */
   def stageFinalize(spark: SparkSession, root: String, vDir: String,
@@ -264,30 +275,9 @@ object FtsIndexBuilder {
       spark.read.parquet(s"$vDir/docstats")
         .agg(sum("n_docs")).collect()(0).getLong(0))
     val tFin = System.nanoTime()
-    // cmask = 64-bit character-class bitmap of the term, the fuzzy-expansion
-    // prefilter (see Distance.charMask) — computed once per distinct term
-    // here instead of per query over the whole dictionary
-    val cmaskU = udf((t: String) => graft.functions.Distance.charMask(t))
-    spark.read.parquet(s"$vDir/segments/*")
-      .groupBy("field", "term")
-      .agg(sum("n").as("df"), sum("sum_tf").as("cf"))
-      .withColumn("cmask", cmaskU($"term"))
-      .repartition(cfg.segmentPartitions / 2 max 1, $"field", $"term")
-      .sortWithinPartitions("field", "term")
-      .write.mode("overwrite").parquet(s"$vDir/dict")
-    // avgdl per field from the dictionary: sum(cf)/N == avg(dl) exactly
-    // (token totals are exact longs; zero-token docs contribute 0 to both)
-    val cfByField = spark.read.parquet(s"$vDir/dict")
-      .groupBy("field").agg(sum("cf").as("cf")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    def avgdl(f: String): Double =
-      if (nDocs == 0) 0.0
-      else cfByField.getOrElse(f,
-        cfByField.getOrElse(FieldContent, 0L)).toDouble / nDocs
-    spark.createDataFrame(Seq((nDocs, avgdl(FieldContent),
-        avgdl(FieldRaw), avgdl(FieldIdent))))
-      .toDF("n_docs", "avgdl_content", "avgdl_raw", "avgdl_ident")
-      .write.mode("overwrite").parquet(s"$vDir/stats")
+    writeDict(spark.read.parquet(s"$vDir/segments/*"),
+      cfg.segmentPartitions / 2 max 1, s"$vDir/dict")
+    Seq(StatsRow(nDocs)).toDF().write.mode("overwrite").parquet(s"$vDir/stats")
     // the norm regime is INDEX state, not caller state: a marker file in
     // the version dir lets delta ops (upsert/fold/compact) reproduce it
     // without every caller re-supplying the flag — a default-Config fold

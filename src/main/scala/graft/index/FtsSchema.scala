@@ -7,8 +7,12 @@ package graft.index
   *   v<N>/
   *     docs/      [[DocRow]]      one row per indexed document
   *     segments/  [[SegmentBlock]] posting blocks, sorted by (field, term, first_doc)
-  *     dict/      [[DictRow]]     global term dictionary (df/cf per field)
-  *     stats/     [[StatsRow]]    one row: corpus-level BM25 stats
+  *     dict/      [[DictRow]]     term dictionary (df/cf per field and term)
+  *     stats/     [[StatsRow]]    one row: the base document count
+  *     deltas/d<k>/ docs, segments, dict and tombstones of delta
+  *                generation k ([[FtsDeltas]]); a snapshot's dictionary
+  *                is the base dict plus every delta dict, df and cf
+  *                summed per (field, term)
   *     manifest/  [[ManifestRow]] one row per build shard (lineage + metrics)
   *   current      text file naming the live version dir (atomic swap, the
   *                reference's tmp-dir + os.rename analog:
@@ -59,8 +63,9 @@ object FtsSchema {
 
   final case class DictRow(field: String, term: String, df: Long, cf: Long)
 
-  final case class StatsRow(n_docs: Long, avgdl_content: Double,
-                            avgdl_raw: Double, avgdl_ident: Double)
+  /** avgdl is not stored: a snapshot derives it from the dictionary's
+    * per-field cf totals and its document count. */
+  final case class StatsRow(n_docs: Long)
 
   /** Per-shard lineage + metrics (the north rule's checkpoint unit).
     * Resume anti-joins `status = "done"` shards against the shard list. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.analysis.Tokenizer
 import graft.functions.PathGlob
-import graft.index.{FtsIndexBuilder, IndexBuilder}
+import graft.index.{FtsDeltas, FtsIndexBuilder, IndexBuilder}
 import graft.index.FtsSchema._
 
 /** Query parameters, mirroring the reference surface
@@ -63,8 +63,9 @@ final case class SearchResult(doc_id: Long, repo: String, path: String,
   *
   * Plan shape at scale: the segment scan is pruned by (field, term)
   * predicates (Parquet min/max on the sorted term column skips row groups);
-  * per-(field,term) df comes from a broadcast join against the dict; the
-  * per-doc evaluation is a hash shuffle of ONLY the matched postings
+  * per-(field,term) df is a driver lookup in the snapshot's one
+  * dictionary ([[dfsOf]]), inlined into the plan with no join; the per-doc
+  * evaluation is a hash shuffle of ONLY the matched postings
   * (positions excluded unless a phrase node needs them); top-k is
   * TakeOrderedAndProject over (doc_id, score) pairs, and only the final k
   * rows ever touch the doc store's content column. Nothing query-sized is
@@ -78,14 +79,8 @@ class FtsIndex(spark: SparkSession, root: String) {
 
   /** Delta batch dirs (incremental upserts/deletes) — see
     * [[graft.index.FtsDeltas]]. */
-  private val deltaDirs: Seq[String] = {
-    val hfs = FtsIndexBuilder.fs(spark, root)
-    val d = new org.apache.hadoop.fs.Path(s"$versionDir/deltas")
-    if (!hfs.exists(d)) Nil
-    else hfs.listStatus(d).toSeq.map(_.getPath)
-      .filter(_.getName.matches("d\\d+"))
-      .sortBy(_.getName.drop(1).toInt).map(_.toString)
-  }
+  private val deltaDirs: Seq[String] = FtsDeltas.generations(spark, versionDir)
+    .map(g => s"$versionDir/deltas/d$g")
   private def deltaSub(sub: String): Seq[String] = {
     val hfs = FtsIndexBuilder.fs(spark, root)
     deltaDirs.map(p => s"$p/$sub")
@@ -122,24 +117,22 @@ class FtsIndex(spark: SparkSession, root: String) {
   /** Base and delta posting blocks: the union of the directory reads. */
   val segments: Dataset[SegmentBlock] = segmentDirs.reduce(_ union _)
 
-  /** Global dictionary: base + delta contributions summed. Dead docs keep
-    * contributing until compaction (reference eventual-consistency
-    * contract, tantivy_index_manager.py:25-33). */
-  val dict: DataFrame = {
-    val paths = s"$versionDir/dict" +: deltaSub("dict")
-    if (paths.length == 1) spark.read.parquet(paths.head)
-    else {
-      // harmonize schemas (an old base dict may predate the cmask column)
-      val parts = paths.map(spark.read.parquet(_)).map { d =>
-        if (d.columns.contains("cmask")) d
-        else d.withColumn("cmask", lit(null).cast("long"))
-      }
-      parts.reduce(_.unionByName(_))
-        .groupBy("field", "term")
-        .agg(sum("df").as("df"), sum("cf").as("cf"),
-          max("cmask").as("cmask"))
-    }
-  }
+  /** One read over the base and every delta `dict` dir with the
+    * [[DictRow]] schema given (an older index's extra columns are not
+    * read): the input of the snapshot's one dictionary, [[termDict]]. */
+  private def dictLayers: DataFrame =
+    spark.read.schema(Encoders.product[DictRow].schema)
+      .parquet(s"$versionDir/dict" +: deltaSub("dict"): _*)
+
+  /** The dictionary as a relation, one row per (field, term), base and
+    * delta contributions summed. Dead docs keep contributing until
+    * compaction (reference eventual-consistency contract,
+    * tantivy_index_manager.py:25-33). A view for inspection: no serving
+    * path reads it, every df comes from [[dfsOf]]. */
+  lazy val dict: DataFrame =
+    if (deltaDirs.isEmpty) dictLayers
+    else dictLayers.groupBy("field", "term")
+      .agg(sum("df").as("df"), sum("cf").as("cf"))
 
   /** (repo, path, gen) delete markers across all deltas. */
   val tombstones: Option[DataFrame] = {
@@ -158,37 +151,31 @@ class FtsIndex(spark: SparkSession, root: String) {
         .drop("tgen")
   }
 
-  val manifest: DataFrame = spark.read.parquet(s"$versionDir/manifest/*")
-
-  private val statsRow = spark.read.parquet(s"$versionDir/stats").collect()(0)
+  lazy val manifest: DataFrame =
+    spark.read.parquet(s"$versionDir/manifest/*")
 
   /** Corpus size including delta docs (alive AND dead — like df, dead docs
     * keep counting until compaction; a Tantivy searcher reload likewise
     * includes new segments in N before merge). Without this, idf mixes a
-    * stale N with an inflated df and can go negative (ADVICE r01 #2). */
-  val nDocs: Long = statsRow.getAs[Long]("n_docs") + {
-    val d = deltaSub("docs")
-    if (d.isEmpty) 0L else spark.read.parquet(d: _*).count()
-  }
+    * stale N with an inflated df and can go negative (ADVICE r01 #2). The
+    * delta docs are counted from their Parquet footers, no job. */
+  val nDocs: Long =
+    spark.read.parquet(s"$versionDir/stats").collect()(0)
+      .getAs[Long]("n_docs") +
+      deltaSub("docs").map(FtsDeltas.parquetRowCount(spark, _)).sum
 
-  /** avgdl per field. Base-only: read from the stats row. With deltas:
-    * recomputed exactly from the combined dictionary (sum cf per field /
-    * N), mirroring stageFinalize's own calculation. */
-  private val avgdlByField: Map[String, Double] =
-    if (deltaDirs.isEmpty) Map(
-      FieldContent -> statsRow.getAs[Double]("avgdl_content"),
-      FieldRaw -> statsRow.getAs[Double]("avgdl_raw"),
-      FieldIdent -> statsRow.getAs[Double]("avgdl_ident"))
-    else {
-      val cfByField = dict.groupBy("field").agg(sum("cf").as("cf"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      def a(f: String): Double =
-        if (nDocs == 0) 0.0
-        else cfByField.getOrElse(f,
-          cfByField.getOrElse(FieldContent, 0L)).toDouble / nDocs
-      Map(FieldContent -> a(FieldContent), FieldRaw -> a(FieldRaw),
-        FieldIdent -> a(FieldIdent))
-    }
+  /** avgdl per field: the dictionary's cf total over N, base and delta
+    * layers alike (sum(cf) / N == avg(dl) exactly: token totals are exact
+    * longs and zero-token docs add 0 to both). A field no layer indexed
+    * takes the content field's. */
+  private lazy val avgdlByField: Map[String, Double] = {
+    val d = termDict
+    Seq(FieldContent, FieldRaw, FieldIdent).map { f =>
+      f -> (if (nDocs == 0) 0.0
+            else d.cf(f).orElse(d.cf(FieldContent)).getOrElse(0L)
+              .toDouble / nDocs)
+    }.toMap
+  }
 
   /** Per-field average document length (BM25 denominator input). */
   def avgdl(field: String): Double = avgdlByField(field)
@@ -213,14 +200,16 @@ class FtsIndex(spark: SparkSession, root: String) {
   private[query] val docStore = new SnapshotStore(
     "graft-doc-store", () => SnapshotStore.docParts(effectiveDocs))
 
-  /** The snapshot's term dictionary on the driver ([[TermDict]]; immutable
-    * once loaded — delta generations produce a new snapshot): one collect
-    * of the dictionary relation, in [[warm]] or on first use. */
-  private lazy val termDict: TermDict = TermDict.collect(dict)
+  /** The snapshot's one term dictionary, on the driver ([[TermDict]];
+    * immutable once loaded — delta generations produce a new snapshot):
+    * one collect of [[dictLayers]], in [[warm]] or on first use. The only
+    * source of df, cf and avgdl. */
+  private lazy val termDict: TermDict = TermDict.collect(dictLayers)
 
   /** df per (field, term), 0 for a term the dictionary lacks: the ONE df
-    * source of every query path, the warm cache included. A binary search
-    * per dictionary run on the driver — no Spark job. */
+    * source of every query path, the warm cache and the exhaustive scorer
+    * included. A binary search per dictionary run on the driver, summed —
+    * no Spark job. */
   private[query] def dfsOf(fts: Seq[(String, String)])
       : Map[(String, String), Long] = {
     val d = termDict
@@ -392,10 +381,10 @@ class FtsIndex(spark: SparkSession, root: String) {
     dyn.map(a => a -> d.expand(a)).toMap
   }
 
-  /** Predicate over (field, term) used to prune both the segment scan and
-    * the dict lookup. Callers pass EXPANDED nodes (fuzzy/regex already
-    * resolved to term sets by [[expandNodes]]) so the predicate is always
-    * a pushable field/term isin — never a UDF over the segments scan. */
+  /** Predicate over (field, term) used to prune the segment scan.
+    * Callers pass EXPANDED nodes (fuzzy/regex already resolved to term
+    * sets by [[expandNodes]]) so the predicate is always a pushable
+    * field/term isin — never a UDF over the segments scan. */
   private def termPredicate(nodes: Seq[Node]): org.apache.spark.sql.Column = {
     require(!nodes.exists(_.alts.exists(a =>
       a.isInstanceOf[FuzzyQ] || a.isInstanceOf[RegexQ])),
@@ -413,15 +402,17 @@ class FtsIndex(spark: SparkSession, root: String) {
 
   /** (doc_id, score) for all matching docs — unfiltered, unlimited.
     *
-    * Two plans:
+    * Two plans, both reading df from [[dfsOf]] on the driver (a posting
+    * whose (field, term) has df 0 is dropped):
     *   - exact path (every alternative is a TermQ — the common query
     *     shape): pure Catalyst. Blocks decode to position-free posting
-    *     rows, dict + node-id relations (both query-bounded) broadcast in,
-    *     BM25 is column math, and AND semantics are one hash aggregate
-    *     with a node bitmask — whole-stage codegen from join to aggregate,
-    *     map-side partial aggregation before the doc_id shuffle.
+    *     rows, idf and node bits are literal CASE columns, BM25 is column
+    *     math, and AND semantics are one hash aggregate with a node
+    *     bitmask — whole-stage codegen from decode to aggregate, map-side
+    *     partial aggregation before the doc_id shuffle.
     *   - general path (phrase/fuzzy/regex): groupByKey over matched
-    *     postings; positions decode ONLY when a phrase node exists, so
+    *     postings, scored by [[FtsIndex.scoreDoc]] against the captured df
+    *     map; positions decode ONLY when a phrase node exists, so
     *     non-phrase shuffles never carry position payloads.
     */
   private def scoreDocs(nodes: Seq[Node]): Dataset[(Long, Double)] = {
@@ -435,31 +426,27 @@ class FtsIndex(spark: SparkSession, root: String) {
     val n = nDocs
     val avgdl = avgdlByField
     val nodesB = nodes
+    val dfs = dfsOf(nodes.flatMap(_.alts)
+      .flatMap(a => termsOf(a).map((a.field, _))).distinct)
     val needPos = nodes.exists(_.alts.exists(_.isInstanceOf[PhraseQ]))
 
-    val decoded: Dataset[Posting] = segments.where(pred).flatMap { b =>
-      val docIds = graft.index.Codec.decodeDeltas(b.doc_bytes, b.n)
-      val tfs = graft.index.Codec.decodeVarints(b.tf_bytes, b.n)
-      val dls = graft.index.Codec.decodeVarints(b.dl_bytes, b.n)
-      val pr =
-        if (needPos) new graft.index.Codec.VarIntReader(b.pos_bytes) else null
-      (0 until b.n).iterator.map { i =>
-        Posting(b.field, b.term, docIds(i), tfs(i), dls(i),
-          if (needPos) pr.readDeltaList(tfs(i).toInt) else EmptyPos)
+    segments.where(pred).flatMap { b =>
+      if (dfs((b.field, b.term)) == 0L) Iterator.empty
+      else {
+        val docIds = graft.index.Codec.decodeDeltas(b.doc_bytes, b.n)
+        val tfs = graft.index.Codec.decodeVarints(b.tf_bytes, b.n)
+        val dls = graft.index.Codec.decodeVarints(b.dl_bytes, b.n)
+        val pr =
+          if (needPos) new graft.index.Codec.VarIntReader(b.pos_bytes)
+          else null
+        (0 until b.n).iterator.map { i =>
+          Posting(b.field, b.term, docIds(i), tfs(i), dls(i),
+            if (needPos) pr.readDeltaList(tfs(i).toInt) else EmptyPos)
+        }
       }
-    }
-    val dictDs = dict.where(pred).as[DictRow]
-    val withDf = decoded
-      .joinWith(broadcast(dictDs),
-        decoded("field") === dictDs("field") &&
-          decoded("term") === dictDs("term"))
-      .map { case (p, d) => (p.doc_id, p.field, p.term, p.tf, p.dl,
-        p.positions, d.df) }
-
-    withDf.groupByKey(_._1)
-      .mapGroups((docId: Long,
-                  rows: Iterator[(Long, String, String, Long, Long, Array[Int], Long)]) =>
-        (docId, FtsIndex.scoreDoc(nodesB, n, avgdl, rows)))
+    }.groupByKey(_.doc_id)
+      .mapGroups((docId: Long, rows: Iterator[Posting]) =>
+        (docId, FtsIndex.scoreDoc(nodesB, n, avgdl, dfs, rows)))
       .filter(r => !r._2.isNaN)
   }
 
@@ -467,22 +454,24 @@ class FtsIndex(spark: SparkSession, root: String) {
     * posting, one hash aggregate keyed by doc_id; the node bitmask encodes
     * AND-of-nodes without a second aggregation pass.
     *
-    * df/idf and the node bit are resolved DRIVER-side ([[dfsOf]], the
+    * df/idf and the node bits are resolved DRIVER-side ([[dfsOf]], the
     * same point lookup every other path does) and inlined as literal CASE
     * expressions, so the per-query plan is scan -> decode -> project -> one
-    * hash aggregate -> top-k: the former dict and node broadcast hash joins (two
-    * BroadcastExchanges and their build jobs per query) are gone. The
-    * arithmetic mirrors the joined plan bit-for-bit (StrictMath.log — the
-    * function Spark's `log` expression evaluates — over the identical
-    * double operation order), asserted by the oracle rows. A query whose
-    * words repeat a (field, term) across nodes (e.g. "merge merge") keeps
-    * the join-based plan: its per-node row duplication sums tscore once
-    * per node, which a single literal row cannot reproduce bit-exactly. */
+    * hash aggregate -> top-k, with no join. The arithmetic is pinned by the
+    * oracle rows (StrictMath.log — the function Spark's `log` expression
+    * evaluates — over a fixed double operation order). A (field, term)
+    * repeated across nodes (e.g. "merge merge") has one CASE arm: the OR
+    * of its node bits, and its tscore times the number of those nodes. */
   private def scoreDocsExact(nodes: Seq[Node]): Dataset[(Long, Double)] = {
     val pred = termPredicate(nodes)
     val pairs = nodes.zipWithIndex.flatMap { case (nd, i) =>
-      nd.alts.collect { case TermQ(f, t) => (f, t, i) }
-    }
+      nd.alts.collect { case TermQ(f, t) => ((f, t), i) }
+    }.distinct
+    val fts = pairs.map(_._1).distinct
+    val nodesOf = pairs.groupMap(_._1)(_._2)
+    val dfMap = dfsOf(fts)
+    val scoreFts = fts.filter(dfMap(_) > 0L).map(ft => (ft, nodesOf(ft)))
+    if (scoreFts.isEmpty) return spark.emptyDataset[(Long, Double)]
     val decoded = segments.where(pred).flatMap { b =>
       val docIds = graft.index.Codec.decodeDeltas(b.doc_bytes, b.n)
       val tfs = graft.index.Codec.decodeVarints(b.tf_bytes, b.n)
@@ -497,65 +486,37 @@ class FtsIndex(spark: SparkSession, root: String) {
         .when(col("field") === FieldRaw, lit(avgdlByField(FieldRaw)))
         .otherwise(lit(avgdlByField(FieldIdent)))
     val fullMask = nodes.indices.map(1L << _).sum
-    val byFt = pairs.groupBy(p => (p._1, p._2))
-
-    if (byFt.valuesIterator.forall(_.size == 1)) {
-      val dfMap = dfsOf(byFt.keys.toSeq)
-      // only (field, term)s present in the dictionary score — the joined
-      // plan's inner-join semantics (a posting without a dict row cannot
-      // occur on a well-formed index, but the filter keeps the plans
-      // equivalent by construction); df = 0 marks absence in dfsOf
-      val scoreFts = pairs.filter(p => dfMap.getOrElse((p._1, p._2), 0L) > 0L)
-      if (scoreFts.isEmpty) return spark.emptyDataset[(Long, Double)]
-      def cond(f: String, t: String) =
-        col("field") === f && col("term") === t
-      // Spark's `log` expression evaluates StrictMath.log; the operand
-      // order mirrors the former column expression exactly
-      def idfLit(df: Long): Double =
-        StrictMath.log(1.0 + (nDocs.toDouble - df + 0.5) / (df + 0.5))
-      def caseOver(v: ((String, String, Int)) => org.apache.spark.sql.Column)
-          : org.apache.spark.sql.Column =
-        scoreFts.tail.foldLeft(
-          when(cond(scoreFts.head._1, scoreFts.head._2), v(scoreFts.head))) {
-          (acc, p) => acc.when(cond(p._1, p._2), v(p))
-        }
-      val idfCol = caseOver(p => lit(idfLit(dfMap((p._1, p._2)))))
-        .otherwise(lit(0.0))
-      val nodeBit = caseOver(p => lit(1L << p._3)).otherwise(lit(0L))
-      val tscore = idfCol * col("tf") * lit(IndexBuilder.K1 + 1.0) /
-        (col("tf") + lit(IndexBuilder.K1) * (lit(1.0 - IndexBuilder.B) +
-          lit(IndexBuilder.B) * col("dl") / avgdlCol))
-      val base =
-        if (scoreFts.size == pairs.size) decoded
-        else decoded.where(FtsIndex.orAll(
-          scoreFts.map(p => cond(p._1, p._2))))
-      base
-        .withColumn("tscore", tscore)
-        .withColumn("nodebit", nodeBit)
-        .groupBy("doc_id")
-        .agg(sum("tscore").as("score"), expr("bit_or(nodebit)").as("mask"))
-        .where(col("mask") === fullMask)
-        .select(col("doc_id"), col("score"))
-        .as[(Long, Double)]
-    } else {
-      val pairsDf = pairs.toDF("field", "term", "node")
-      val idf = log(lit(1.0) +
-        (lit(nDocs.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-      val tscore = idf * col("tf") * lit(IndexBuilder.K1 + 1.0) /
-        (col("tf") + lit(IndexBuilder.K1) * (lit(1.0 - IndexBuilder.B) +
-          lit(IndexBuilder.B) * col("dl") / avgdlCol))
-      decoded
-        .join(broadcast(dict.where(pred).select("field", "term", "df")),
-          Seq("field", "term"))
-        .join(broadcast(pairsDf), Seq("field", "term"))
-        .withColumn("tscore", tscore)
-        .groupBy("doc_id")
-        .agg(sum("tscore").as("score"),
-          expr("bit_or(shiftleft(CAST(1 AS BIGINT), node))").as("mask"))
-        .where(col("mask") === fullMask)
-        .select(col("doc_id"), col("score"))
-        .as[(Long, Double)]
-    }
+    def cond(ft: (String, String)) =
+      col("field") === ft._1 && col("term") === ft._2
+    // Spark's `log` expression evaluates StrictMath.log; the operand
+    // order mirrors the column expression it replaced exactly
+    def idfLit(df: Long): Double =
+      StrictMath.log(1.0 + (nDocs.toDouble - df + 0.5) / (df + 0.5))
+    def caseOver(v: (((String, String), Seq[Int])) => Any)
+        : org.apache.spark.sql.Column =
+      scoreFts.tail.foldLeft(
+        when(cond(scoreFts.head._1), lit(v(scoreFts.head)))) {
+        (acc, p) => acc.when(cond(p._1), lit(v(p)))
+      }
+    val idfCol = caseOver(p => idfLit(dfMap(p._1))).otherwise(lit(0.0))
+    val nodeBit = caseOver(_._2.map(1L << _).reduce(_ | _)).otherwise(lit(0L))
+    val bm25 = idfCol * col("tf") * lit(IndexBuilder.K1 + 1.0) /
+      (col("tf") + lit(IndexBuilder.K1) * (lit(1.0 - IndexBuilder.B) +
+        lit(IndexBuilder.B) * col("dl") / avgdlCol))
+    val tscore =
+      if (scoreFts.forall(_._2.size == 1)) bm25
+      else bm25 * caseOver(_._2.size.toDouble).otherwise(lit(0.0))
+    val base =
+      if (scoreFts.size == fts.size) decoded
+      else decoded.where(FtsIndex.orAll(scoreFts.map(p => cond(p._1))))
+    base
+      .withColumn("tscore", tscore)
+      .withColumn("nodebit", nodeBit)
+      .groupBy("doc_id")
+      .agg(sum("tscore").as("score"), expr("bit_or(nodebit)").as("mask"))
+      .where(col("mask") === fullMask)
+      .select(col("doc_id"), col("score"))
+      .as[(Long, Double)]
   }
 
   // ---- public API --------------------------------------------------------
@@ -810,13 +771,7 @@ object FtsIndex {
     * tracking, server/cache/fts_index_cache.py:34-47). */
   def fingerprint(spark: SparkSession, root: String): String = {
     val vDir = FtsIndexBuilder.currentVersionDir(spark, root)
-    val hfs = FtsIndexBuilder.fs(spark, root)
-    val d = new org.apache.hadoop.fs.Path(s"$vDir/deltas")
-    val gens =
-      if (!hfs.exists(d)) Nil
-      else hfs.listStatus(d).toSeq.map(_.getPath.getName)
-        .filter(_.matches("d\\d+")).sortBy(_.drop(1).toInt)
-    fingerprint(vDir, gens)
+    fingerprint(vDir, FtsDeltas.generations(spark, vDir).map(g => s"d$g"))
   }
 
   private[query] def fingerprint(vDir: String, gens: Seq[String]): String =
@@ -845,16 +800,14 @@ object FtsIndex {
     idfV * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
   }
 
-  /** BM25-evaluate all nodes against one document's matched postings.
-    * Row shape: (doc_id, field, term, tf, dl, positions, df).
+  /** BM25-evaluate all nodes against one document's matched postings,
+    * each term's df taken from `dfs`.
     * Returns NaN when any node fails to match (AND semantics). */
   private[query] def scoreDoc(
       nodes: Seq[Node], n: Long, avgdl: Map[String, Double],
-      rows: Iterator[(Long, String, String, Long, Long, Array[Int], Long)])
-      : Double = {
-    val postings = rows.toArray
-    val byFieldTerm = postings.iterator.map(r => ((r._2, r._3), r)).toMap
-    def idf(df: Long): Double = idfOf(n, df)
+      dfs: Map[(String, String), Long], rows: Iterator[Posting]): Double = {
+    val byFieldTerm = rows.map(r => ((r.field, r.term), r)).toMap
+    def idf(ft: (String, String)): Double = idfOf(n, dfs(ft))
     def bm25(tf: Double, dl: Long, field: String, idfV: Double): Double =
       bm25Of(tf, dl, avgdl(field), idfV)
     var total = 0.0
@@ -864,15 +817,15 @@ object FtsIndex {
       node.alts.foreach {
         case TermQ(f, t) =>
           byFieldTerm.get((f, t)).foreach { p =>
-            total += bm25(p._4.toDouble, p._5, f, idf(p._7)); matched = true
+            total += bm25(p.tf.toDouble, p.dl, f, idf((f, t))); matched = true
           }
         case PhraseQ(f, ts) =>
           val ps = ts.map(t => byFieldTerm.get((f, t)))
           if (ps.forall(_.isDefined)) {
-            val pf = phraseFreq(ps.map(_.get._6))
+            val pf = phraseFreq(ps.map(_.get.positions))
             if (pf > 0) {
-              val idfSum = ps.map(p => idf(p.get._7)).sum
-              total += bm25(pf.toDouble, ps.head.get._5, f, idfSum)
+              val idfSum = ts.map(t => idf((f, t))).sum
+              total += bm25(pf.toDouble, ps.head.get.dl, f, idfSum)
               matched = true
             }
           }

@@ -41,8 +41,10 @@ import graft.index.FtsSchema._
   * LIVE DELTAS: the cache keeps serving while delta generations exist —
   * the streaming regime, where the reference daemon never drops its warm
   * index (daemon/cache.py:82-383). The snapshot's delta-sized dead set
-  * ([[FtsIndex.deadSet]]) keeps tombstoned docs out of the kernel;
-  * segments/dict/N/avgdl are already delta-merged by [[FtsIndex]].
+  * ([[FtsIndex.deadSet]]) keeps tombstoned docs out of the kernel; the
+  * segments are base plus delta blocks, and df, N and avgdl come from the
+  * snapshot's one dictionary, which sums its base and delta layers
+  * ([[TermDict]]).
   *
   * The pipeline falls back to the exhaustive [[FtsIndex.searchCollected]]
   * in two cases only: the dead set is past its driver budget, or a

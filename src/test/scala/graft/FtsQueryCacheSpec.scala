@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Fixtures
@@ -27,42 +25,6 @@ class FtsQueryCacheSpec extends AnyFunSuite {
     assert(got.map(_.doc_id) === ex.map(_.doc_id), s"docs of $what")
     got.zip(ex).foreach { case (a, b) =>
       assert(math.abs(a.score - b.score) < 1e-8, s"score of $what")
-    }
-  }
-
-  /** Counts SQL executions finished between construction and [[count]].
-    * The listener bus is asynchronous and delivers events in order, so
-    * both ends run a sentinel execution and wait until it is delivered:
-    * what finished before construction is delivered before the first
-    * sentinel and never counted. */
-  private final class SqlExecutions extends QueryExecutionListener {
-    private val seen = new java.util.concurrent.atomic.AtomicInteger
-    @volatile private var sentinelsSeen = 0
-    private val sentinelRows = 7919L
-    override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-      if (qe.analyzed.toString.contains(s"Range (0, $sentinelRows"))
-        sentinelsSeen += 1
-      else if (sentinelsSeen == 1) seen.incrementAndGet()
-    override def onFailure(f: String, qe: QueryExecution,
-                           e: Exception): Unit =
-      if (sentinelsSeen == 1) seen.incrementAndGet()
-    spark.listenerManager.register(this)
-    sentinel(1)
-
-    /** Run a sentinel and wait until the `n`-th one is delivered. */
-    private def sentinel(n: Int): Unit = {
-      spark.range(sentinelRows).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (sentinelsSeen < n && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      if (sentinelsSeen < n) spark.listenerManager.unregister(this)
-      assert(sentinelsSeen >= n, "sentinel SQL execution never delivered")
-    }
-
-    def count(): Int = {
-      sentinel(2)
-      spark.listenerManager.unregister(this)
-      seen.get()
     }
   }
 
@@ -95,7 +57,7 @@ class FtsQueryCacheSpec extends AnyFunSuite {
     val idx = new FtsIndex(spark, root).warm()
     val mine = storeIds -- othersIds
     assert(mine.size === 2, "warm() builds the two stores")
-    val sql = new SqlExecutions
+    val sql = new SqlExecutions(spark)
     val got = shapes.map { case (n, q) =>
       val cache = new FtsQueryCache(idx)
       val r = cache.search(q)
@@ -122,7 +84,7 @@ class FtsQueryCacheSpec extends AnyFunSuite {
     expected.foreach { case (n, ex) => assert(ex.nonEmpty, s"$n matches") }
     val idx = new FtsIndex(spark, root).warm()
     val cache = new FtsQueryCache(idx, maxDfCached = 0)
-    val sql = new SqlExecutions
+    val sql = new SqlExecutions(spark)
     val got = shapes.map { case (n, q) =>
       n -> (idx.searchWand(q), cache.search(q)) }
     assert(sql.count() === 0,

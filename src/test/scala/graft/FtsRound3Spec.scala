@@ -190,7 +190,8 @@ class FtsRound3Spec extends AnyFunSuite {
     hfs.delete(new org.apache.hadoop.fs.Path(s"$vDir/dict"), true)
     assert(hfs.rename(new org.apache.hadoop.fs.Path(s"$vDir/dict_nocmask"),
       new org.apache.hadoop.fs.Path(s"$vDir/dict")))
-    // a delta whose dict DOES carry cmask forces the merged-dict branch
+    // a delta layer makes the dictionary read span two layouts: the
+    // base dir without cmask and a delta dir of the current layout
     FtsDeltas.upsert(spark, TestSpark.docsDf(Seq(
       Fixtures.Doc("test_repo", "src/extra.py", "e" * 40, "python",
         "def unrelated_fn(): return 1", Nil))), root, cfg)

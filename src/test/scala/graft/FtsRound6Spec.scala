@@ -156,8 +156,8 @@ class FtsRound6Spec extends AnyFunSuite {
     ann.close()
   }
 
-  test("duplicate-word exact query rides the join fallback and scores " +
-       "each node occurrence (\"merge merge\" = 2x \"merge\")") {
+  test("duplicate-word exact query scores each node occurrence " +
+       "(\"merge merge\" = 2x \"merge\")") {
     val root = freshIndex(Fixtures.corpusA)
     val idx = new FtsIndex(spark, root).warm()
     val once = idx.searchCollected(FtsQuery("authenticate", limit = 50))
