@@ -71,11 +71,20 @@ object FtsIndexBuilder {
   final case class BuildReport(version: String, nDocs: Long,
                                shardsBuilt: Seq[Int], shardsSkipped: Seq[Int])
 
-  /** Row cap for broadcasting the doc-id table in [[stageDocs]] (~100 B
-    * per row of key + id -> a few hundred MB at the cap, within the
-    * guide's broadcast comfort zone); larger corpora per build fall back
-    * to a shuffle join, which costs what the former window plan cost. */
-  private val MaxBroadcastIdRows = 4L << 20
+  /** Byte budget for broadcasting the doc-id table in [[stageDocs]]:
+    * 4 Mi rows of ~100 B of key + id, a few hundred MB, within the guide's
+    * broadcast comfort zone. A larger table falls back to a shuffle join,
+    * which costs what the former window plan cost. */
+  private val MaxBroadcastIdBytes = (4L << 20) * 100
+
+  /** Whether a doc-id table of `nIds` rows and `nCols` columns, whose
+    * string keys sum to `keyBytes` UTF-8 bytes, fits the broadcast
+    * budget: the key bytes plus 8 B per row and column (an UnsafeRow's
+    * null-bit word and fixed-width slots). Gated on bytes, not rows, so a
+    * corpus of few docs with long paths cannot broadcast gigabytes. */
+  private[graft] def broadcastsIds(nIds: Long, keyBytes: Long,
+                                   nCols: Int): Boolean =
+    keyBytes + nIds * 8L * (nCols + 1) <= MaxBroadcastIdBytes
 
   private[graft] def fs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -162,18 +171,20 @@ object FtsIndexBuilder {
           lag(col(c), 1).over(w) <=> col(c)).reduce(_ && _))
         .persist()
       val idStats = idTable.agg(count(lit(1)),
-        min(when($"dup", struct(keyCols.map(col): _*)))).head()
+        min(when($"dup", struct(keyCols.map(col): _*))),
+        coalesce(sum(octet_length($"repo") + octet_length($"path")),
+          lit(0L))).head()
       if (!idStats.isNullAt(1)) {
         idTable.unpersist()
         throw new IllegalArgumentException(
           s"duplicate source key (${keyCols.mkString(", ")}) = " +
             idStats.getStruct(1).toSeq.mkString("(", ", ", ")"))
       }
-      val nIds = idStats.getLong(0)
       val ids = idTable.drop("dup")
       val payload = withIds.drop("doc_id", "shard", "sha256", "ids", "clen")
       val attached =
-        if (nIds <= MaxBroadcastIdRows)
+        if (broadcastsIds(idStats.getLong(0), idStats.getLong(2),
+              ids.columns.length))
           payload.join(broadcast(ids), keyCols)
         else
           // beyond the broadcast budget (~10^8-row corpora per build
@@ -275,7 +286,11 @@ object FtsIndexBuilder {
       spark.read.parquet(s"$vDir/docstats")
         .agg(sum("n_docs")).collect()(0).getLong(0))
     val tFin = System.nanoTime()
-    writeDict(spark.read.parquet(s"$vDir/segments/*"),
+    // the shard-group dirs, listed (as FtsIndex does): a glob path makes
+    // the Parquet source probe a metadata dir named after the glob
+    val groupDirs = hfs.listStatus(new Path(s"$vDir/segments"))
+      .filter(_.isDirectory).map(_.getPath.toString).sorted
+    writeDict(spark.read.parquet(groupDirs.toIndexedSeq: _*),
       cfg.segmentPartitions / 2 max 1, s"$vDir/dict")
     Seq(StatsRow(nDocs)).toDF().write.mode("overwrite").parquet(s"$vDir/stats")
     // the norm regime is INDEX state, not caller state: a marker file in

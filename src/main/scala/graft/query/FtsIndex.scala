@@ -615,9 +615,12 @@ class FtsIndex(spark: SparkSession, root: String) {
         lineStartCol.cast("int").as("ls"))
       .as[(Long, String, String, String, String, Double, Int)]
 
-    top.map { case (docId, repo, path, lang, content, score, ls) =>
-      FtsIndex.hitOf(q, snippetLines, docId, repo, path, lang, content, ls,
-        score)
+    top.mapPartitions { rows =>
+      val m = Snippets.matcher(q)
+      rows.map { case (docId, repo, path, lang, content, score, ls) =>
+        FtsIndex.hitOf(m, snippetLines, docId, repo, path, lang,
+          new Snippets.TextView(content), ls, score)
+      }
     }
   }
 
@@ -728,8 +731,9 @@ class FtsIndex(spark: SparkSession, root: String) {
     if (top.isEmpty) return Nil
     // top is ordered (score desc, doc asc) by the kernel already
     val rows = lk.rows(top.map(_.doc), withContent = true)
-    top.flatMap(s => rows.get(s.doc).map(e => hitOf(q, snippetLines, s.doc,
-      e.repo, e.path, e.lang, e.content, e.ls, s.score)))
+    val m = Snippets.matcher(q)
+    top.flatMap(s => rows.get(s.doc).map(e => hitOf(m, snippetLines, s.doc,
+      e.repo, e.path, e.lang, e.text, e.ls, s.score)))
   }
 
   /** The kernel on the cluster: [[wandTopK]] in each segment-store
@@ -840,31 +844,22 @@ object FtsIndex {
   }
 
   /** One hit row of a scored doc: its first match (a regex match in
-    * regex mode), the snippet around it and FILE-absolute lines (`ls` is a
-    * chunk doc's line_start, 1 for a whole file). Without a match, the
-    * reference's fallback row at the doc's line_start. Shared by every
-    * search path. */
-  private[query] def hitOf(q: FtsQuery, snippetLines: Int, docId: Long,
-                           repo: String, path: String, lang: String,
-                           content: String, ls: Int,
-                           score: Double): SearchResult = {
-    val m =
-      if (q.useRegex) {
-        val flags =
-          if (q.caseSensitive) 0 else java.util.regex.Pattern.CASE_INSENSITIVE
-        Snippets.findRegexMatch(content,
-          java.util.regex.Pattern.compile(q.text, flags))
-      } else Snippets.findMatch(content, q.text, q.caseSensitive,
-        q.editDistance)
-    m match {
+    * regex mode) by the query's matcher, the snippet around it and
+    * FILE-absolute lines (`ls` is a chunk doc's line_start, 1 for a whole
+    * file). Without a match, the reference's fallback row at the doc's
+    * line_start. Shared by every search path. */
+  private[query] def hitOf(m: Snippets.QueryMatcher, snippetLines: Int,
+                           docId: Long, repo: String, path: String,
+                           lang: String, doc: Snippets.TextView, ls: Int,
+                           score: Double): SearchResult =
+    m.find(doc) match {
       case Some(mm) =>
-        val e = Snippets.extractSnippet(content, mm.start, snippetLines)
+        val e = doc.extract(mm.start, snippetLines)
         SearchResult(docId, repo, path, e.line + ls - 1, e.column, mm.text,
           e.snippet, e.snippetStartLine + ls - 1, lang, score)
       case None =>
-        SearchResult(docId, repo, path, ls, 1, q.text, "", ls, lang, score)
+        SearchResult(docId, repo, path, ls, 1, m.text, "", ls, lang, score)
     }
-  }
 
   /** An exact alternative's terms: a term's one, a phrase's in order. */
   private[query] def termsOf(a: FieldQ): Seq[String] = a match {

@@ -30,7 +30,11 @@ import graft.index.FtsSchema._
   *   - fuzzy/regex dictionary expansions per alternative;
   *   - phrase alignments per (phrase, snapshot);
   *   - doc metadata (repo/path/lang/lines) and doc content rows by doc_id,
-  *     fetched from the doc store by the same kind of `runJob`.
+  *     fetched from the doc store by the same kind of `runJob`. A content
+  *     row keeps its snippet state ([[SnapshotStore.DocEntry]]'s text
+  *     view: the lowercased content and the line starts), built on its
+  *     first hit, so a repeat hit lowercases and splits nothing — only
+  *     the query's own match and one substring remain per hit.
   *
   * A cold query therefore runs at most two plain Spark jobs (blocks, then
   * rows) and ZERO SQL executions; df and fuzzy/regex expansion never
@@ -133,7 +137,10 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
     inheritedState.map(_._2).getOrElse(lru[Long, DocEntry](maxDocs * 4))
 
   /** LRU doc_id -> doc row with content — fetched only for FINAL top-k
-    * rows; immutable per doc_id: inherited. */
+    * rows; immutable per doc_id: inherited. Each row holds its text view
+    * once a hit built it, so the LRU's weight per row is the content
+    * plus, for a case-insensitive literal match, its lowercased copy and
+    * 4 B per line. */
   private val fullRows: java.util.LinkedHashMap[Long, DocEntry] =
     inheritedState.map(_._3).getOrElse(lru[Long, DocEntry](maxDocs))
 
@@ -318,6 +325,11 @@ class FtsQueryCache(private[query] val idx: FtsIndex, maxTerms: Int = 4096,
   private[graft] def hasBlocksFor(field: String, term: String): Boolean =
     baseBlocks.synchronized(baseBlocks.containsKey((field, term))) ||
       deltaBlocks.synchronized(deltaBlocks.containsKey((field, term)))
+
+  /** The cached content row of a doc, if held (the text-view reuse spec
+    * reads it). */
+  private[graft] def fullRow(id: Long): Option[DocEntry] =
+    fullRows.synchronized(Option(fullRows.get(id)))
 
   private[graft] def cachedTermCount: Int =
     baseBlocks.synchronized(baseBlocks.size()) +

@@ -10,9 +10,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * Reference analog: the daemon's FTS index cache tracks staleness by
   * rebuild-uuid and reloads on access (server/cache/fts_index_cache.py:34-47,
   * daemon/cache.py:82-383). Here the fingerprint is the live version dir
-  * plus the sorted delta-generation list; each access compares it (two
-  * cheap filesystem metadata calls, no Spark job) and swaps in a freshly
-  * warmed [[FtsIndex]] when it changed, unpersisting the stale one.
+  * plus the sorted delta-generation list; each access compares it (no
+  * Spark job, but not free: it opens and reads the `current` pointer file
+  * through the checksummed filesystem, then stats and lists `deltas/` —
+  * a few percent of a warm hit's time) and swaps in a freshly warmed
+  * [[FtsIndex]] when it changed, unpersisting the stale one.
   */
 class ReloadingFtsIndex(spark: SparkSession, root: String,
                         warmOnLoad: Boolean = true) {
@@ -26,9 +28,9 @@ class ReloadingFtsIndex(spark: SparkSession, root: String,
   }
 
   /** The current (fresh) index, reloading first if the root moved. The
-    * fingerprint is RE-READ inside the lock (two cheap metadata calls):
-    * with two readers racing a publish, comparing against the pre-lock
-    * read would reload — and re-warm — a snapshot a sibling just
+    * fingerprint is RE-READ inside the lock (the same pointer read and
+    * listing): with two readers racing a publish, comparing against the
+    * pre-lock read would reload — and re-warm — a snapshot a sibling just
     * swapped in. */
   def index: FtsIndex = {
     if (FtsIndex.fingerprint(spark, root) != cur.fingerprint) synchronized {

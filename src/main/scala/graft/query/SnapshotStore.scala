@@ -110,9 +110,17 @@ private[query] object SnapshotStore {
       String.valueOf(t.getMessage).contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"))
 
   /** One doc's serving row: the filter columns, the chunk line range
-    * (1 / Long.MaxValue for whole-file docs) and the content. */
+    * (1 / Long.MaxValue for whole-file docs) and the content (null in a
+    * metadata-only row). `text` is the content's snippet state
+    * ([[Snippets.TextView]]: lowercased copy, line starts), built on the
+    * first hit that reads it and kept for as long as the row is: a row
+    * the warm cache holds ([[FtsQueryCache]]'s `fullRows`) serves every
+    * repeat hit from it. Never serialized — a row shipped from an
+    * executor arrives without it. */
   final case class DocEntry(repo: String, path: String, lang: String,
-                            ls: Int, le: Long, content: String)
+                            ls: Int, le: Long, content: String) {
+    @transient lazy val text: Snippets.TextView = new Snippets.TextView(content)
+  }
 
   /** One partition per segment directory (each holds whole shards), each
     * a (field, term) map of the term's blocks. */

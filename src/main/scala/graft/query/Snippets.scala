@@ -13,8 +13,17 @@ package graft.query
   *   - snippet = +-N lines around the match line; snippet_lines == 0 =>
   *     empty snippet but line/column still computed
   *
-  * Presentation-layer code: runs as a Dataset map over the final top-k
-  * rows only, never over the corpus.
+  * Presentation-layer code: runs once per final top-k row, never over the
+  * corpus — per hit on the driver in the WAND pipeline
+  * ([[FtsIndex.wandSearch]]), and as a Dataset map over the exhaustive
+  * scorer's top-k rows. The work is split by what it depends on: a
+  * [[QueryMatcher]] holds what depends only on the query (lowercased
+  * needle and first word, the compiled regex) and is built once per
+  * query; a [[TextView]] holds what depends only on the document (its
+  * lowercased copy, its line starts) and is built once per row — the warm
+  * cache keeps it with the row ([[SnapshotStore.DocEntry]]), so a repeat
+  * hit on a document lowercases and splits nothing. The `String` entry
+  * points below are thin wrappers over the two.
   */
 object Snippets {
 
@@ -22,23 +31,119 @@ object Snippets {
   final case class Extracted(snippet: String, line: Int, column: Int,
                              snippetStartLine: Int)
 
+  /** A document's text state for match finding and snippet extraction,
+    * each part computed on first use and then kept: the lowercased copy
+    * (only a case-insensitive literal or fuzzy match reads it) and the
+    * offsets at which its '\n'-separated lines start. Safe to share
+    * across threads: a racing first use computes the same value twice. */
+  final class TextView(val content: String) {
+    @volatile private var lowerC: String = null
+    @volatile private var startsC: Array[Int] = null
+
+    /** `content.toLowerCase`, the haystack of a case-insensitive match;
+      * its offsets are used as offsets into `content`, as the reference
+      * does. */
+    def lower: String = {
+      var s = lowerC
+      if (s == null) { s = content.toLowerCase; lowerC = s }
+      s
+    }
+
+    /** Start offset of each line of `content.split("\n", -1)`. */
+    def lineStarts: Array[Int] = {
+      var a = startsC
+      if (a == null) {
+        val b = Array.newBuilder[Int]
+        b += 0
+        var i = content.indexOf('\n')
+        while (i >= 0) { b += i + 1; i = content.indexOf('\n', i + 1) }
+        a = b.result()
+        startsC = a
+      }
+      a
+    }
+
+    /** Snippet + 1-indexed line/column from a character offset
+      * (reference: _extract_snippet, tantivy_index_manager.py:860-911).
+      * An offset outside every line's characters — negative, past the
+      * end, on a '\n' or inside an empty line — reports line 1, column
+      * 1. */
+    def extract(matchStart: Int, snippetLines: Int): Extracted = {
+      val starts = lineStarts
+      def lineEnd(i: Int): Int =
+        if (i + 1 < starts.length) starts(i + 1) - 1 else content.length
+      // the last line starting at or before matchStart
+      var lo = 0
+      var hi = starts.length - 1
+      while (lo < hi) {
+        val mid = (lo + hi + 1) >>> 1
+        if (starts(mid) <= matchStart) lo = mid else hi = mid - 1
+      }
+      val (lineNumber, column) =
+        if (matchStart >= 0 && matchStart < lineEnd(lo))
+          (lo + 1, matchStart - starts(lo) + 1)
+        else (1, 1)
+      if (snippetLines == 0)
+        return Extracted("", lineNumber, column, lineNumber)
+      val li = lineNumber - 1
+      val start = math.max(0, li - snippetLines)
+      val end = math.min(starts.length, li + snippetLines + 1)
+      val snippet =
+        if (start >= end) "" else content.substring(starts(start), lineEnd(end - 1))
+      Extracted(snippet, lineNumber, column, start + 1)
+    }
+  }
+
+  /** One query's match state, built once per query and applied to every
+    * hit: the needle and its first word, lowercased once unless the query
+    * is case-sensitive, and in regex mode the pattern, compiled on first
+    * use (so a query without hits compiles nothing, as before). */
+  final class QueryMatcher(val text: String, caseSensitive: Boolean,
+                           editDistance: Int, useRegex: Boolean) {
+    private val needle = if (caseSensitive) text else text.toLowerCase
+    private val firstWord = text.split("\\s+").headOption.getOrElse("")
+    private val firstNeedle =
+      if (caseSensitive) firstWord else firstWord.toLowerCase
+    @volatile private var patternC: java.util.regex.Pattern = null
+
+    private def pattern: java.util.regex.Pattern = {
+      var p = patternC
+      if (p == null) {
+        p = java.util.regex.Pattern.compile(text,
+          if (caseSensitive) 0 else java.util.regex.Pattern.CASE_INSENSITIVE)
+        patternC = p
+      }
+      p
+    }
+
+    /** The query's first match in the document, None if nothing found
+      * (the reference then falls back to line_start=1/column=1 and an
+      * empty snippet). */
+    def find(doc: TextView): Option[Match] =
+      if (useRegex) findRegexMatch(doc.content, pattern)
+      else {
+        val hay = if (caseSensitive) doc.content else doc.lower
+        val direct = hay.indexOf(needle)
+        if (direct >= 0) Some(Match(direct, text))
+        else {
+          val at = if (firstWord.isEmpty) -1 else hay.indexOf(firstNeedle)
+          if (at >= 0) Some(Match(at, firstWord))
+          else if (editDistance > 0) fuzzyMatch(doc.content, hay, needle)
+          else None
+        }
+      }
+  }
+
+  /** The matcher of a query's text and flags. */
+  def matcher(q: FtsQuery): QueryMatcher =
+    new QueryMatcher(q.text, q.caseSensitive, q.editDistance, q.useRegex)
+
   /** Locate the match for a non-regex query. Returns None if nothing found
     * (reference then falls back to line_start=1/column=1, empty snippet). */
   def findMatch(content: String, queryText: String, caseSensitive: Boolean,
-                editDistance: Int): Option[Match] = {
-    val hay = if (caseSensitive) content else content.toLowerCase
-    val needle = if (caseSensitive) queryText else queryText.toLowerCase
-    val direct = hay.indexOf(needle)
-    if (direct >= 0) return Some(Match(direct, queryText))
-    val firstWord = queryText.split("\\s+").headOption.getOrElse("")
-    if (firstWord.nonEmpty) {
-      val fw = if (caseSensitive) firstWord else firstWord.toLowerCase
-      val at = hay.indexOf(fw)
-      if (at >= 0) return Some(Match(at, firstWord))
-    }
-    if (editDistance > 0) findFuzzyMatch(content, queryText, caseSensitive)
-    else None
-  }
+                editDistance: Int): Option[Match] =
+    new QueryMatcher(queryText, caseSensitive, editDistance, useRegex = false)
+      .find(new TextView(content))
 
   /** Regex-mode match extraction (first match of the compiled pattern over
     * the raw content; reference: tantivy_index_manager.py:683-705). */
@@ -51,9 +156,15 @@ object Snippets {
     * query (reference: _find_fuzzy_match, tantivy_index_manager.py:782-858).
     */
   def findFuzzyMatch(content: String, queryText: String,
-                     caseSensitive: Boolean): Option[Match] = {
-    val hay = if (caseSensitive) content else content.toLowerCase
-    val needle = if (caseSensitive) queryText else queryText.toLowerCase
+                     caseSensitive: Boolean): Option[Match] =
+    if (caseSensitive) fuzzyMatch(content, content, queryText)
+    else fuzzyMatch(content, content.toLowerCase, queryText.toLowerCase)
+
+  /** [[findFuzzyMatch]] over `hay` (`content`, lowercased unless the
+    * query is case-sensitive) and the needle cased like it; the matched
+    * text is taken from `content` at the window's offsets. */
+  private def fuzzyMatch(content: String, hay: String,
+                         needle: String): Option[Match] = {
     if (needle.trim.isEmpty) return None
 
     val (r1, s1, l1) = bestWindow(hay, needle)
@@ -172,30 +283,6 @@ object Snippets {
   /** Snippet + 1-indexed line/column from a character offset (reference:
     * _extract_snippet, tantivy_index_manager.py:860-911). */
   def extractSnippet(content: String, matchStart: Int,
-                     snippetLines: Int): Extracted = {
-    val lines = content.split("\n", -1)
-    var lineNumber = 1
-    var column = 1
-    var pos = 0
-    var idx = 0
-    var found = false
-    while (idx < lines.length && !found) {
-      val len = lines(idx).length
-      if (pos <= matchStart && matchStart < pos + len) {
-        lineNumber = idx + 1
-        column = matchStart - pos + 1
-        found = true
-      } else {
-        pos += len + 1
-        idx += 1
-      }
-    }
-    if (snippetLines == 0)
-      return Extracted("", lineNumber, column, lineNumber)
-    val li = lineNumber - 1
-    val start = math.max(0, li - snippetLines)
-    val end = math.min(lines.length, li + snippetLines + 1)
-    Extracted(lines.slice(start, end).mkString("\n"), lineNumber, column,
-      start + 1)
-  }
+                     snippetLines: Int): Extracted =
+    new TextView(content).extract(matchStart, snippetLines)
 }

@@ -168,9 +168,16 @@ object Wand {
     // ordering (score desc, doc asc): the worst member — the eviction
     // candidate at peek() — is the lowest score, and among exact score
     // ties the HIGHEST doc_id, so ties at the k boundary resolve exactly
-    // like the exhaustive path's orderBy(desc(score), asc(doc_id))
+    // like the exhaustive path's orderBy(desc(score), asc(doc_id)).
+    // Sized by the shard's candidate bound, not by k (a limit=0 query's k
+    // is 100 000): an AND match appears in every group, so no more docs
+    // match than the smallest group's summed postings; the queue grows if
+    // it has to
+    val candidates = groups.iterator.map(_.map(_._1.map(_.n.toLong).sum).sum)
+      .minOption.getOrElse(1L)
     val heap = new java.util.PriorityQueue[Scored](
-      math.max(k, 1), (a: Scored, b: Scored) => {
+      math.max(math.min(k.toLong, candidates), 1L).toInt,
+      (a: Scored, b: Scored) => {
         val c = java.lang.Double.compare(a.score, b.score)
         if (c != 0) c else java.lang.Long.compare(b.doc, a.doc)
       })

@@ -166,4 +166,39 @@ class FtsBuildSpec extends AnyFunSuite {
       "no docs table may be committed")
     finally written.close()
   }
+
+  test("identical dictionaries across layouts: one shard group or one per " +
+       "shard, each the per-term sums of the segments") {
+    def build(groups: Int): String = {
+      val root = TestSpark.tempDir(s"layout$groups")
+      FtsIndexBuilder.build(spark,
+        TestSpark.docsDf(Fixtures.corpusA ++ Fixtures.corpusB), root,
+        FtsIndexBuilder.Config(nShards = 3, segmentPartitions = 5,
+          shardGroups = groups))
+      root
+    }
+    def dictOf(root: String): Seq[String] =
+      new FtsIndex(spark, root).dict.collect().map(_.toString).sorted.toSeq
+    val (one, many) = (build(1), build(3))
+    assert(new java.io.File(s"$many/v1/segments").list().count(
+      _.startsWith("g")) === 3)
+    assert(dictOf(one) === dictOf(many))
+    val idx = new FtsIndex(spark, many)
+    val sums = idx.segments.collect().groupBy(b => (b.field, b.term))
+      .map { case (ft, bs) => (ft, (bs.map(_.n.toLong).sum, bs.map(_.sum_tf).sum)) }
+    val dict = idx.dict.select("field", "term", "df", "cf").collect()
+      .map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getLong(3))))
+      .toMap
+    assert(dict === sums)
+  }
+
+  test("the doc-id broadcast is gated on bytes: a small corpus broadcasts, " +
+       "a few rows with huge keys shuffle") {
+    // (repo, path, shard, doc_id): 4 columns
+    assert(FtsIndexBuilder.broadcastsIds(16384, 16384L * 60, 4))
+    // the former row cap with ~60 B keys still fits
+    assert(FtsIndexBuilder.broadcastsIds(4L << 20, (4L << 20) * 60, 4))
+    assert(!FtsIndexBuilder.broadcastsIds(10, 10L * (64L << 20), 4))
+    assert(!FtsIndexBuilder.broadcastsIds(8L << 20, (8L << 20) * 20, 4))
+  }
 }

@@ -4,19 +4,29 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Fixtures
 import graft.index.FtsIndexBuilder
-import graft.query.{FtsIndex, FtsQuery}
+import graft.query.{FtsIndex, FtsQuery, SearchResult}
 
 /** Seeded randomized differential testing: a generated corpus and a
   * generated query battery, asserting the exhaustive scorer and the WAND
   * pipeline — its kernel on the cluster (`searchWand`, and the warm cache
   * with every df gate failing) or on the driver (the warm cache) — return
-  * identical docs and fp-tolerant-identical scores for EVERY shape
+  * identical results (docs, lines, match text, snippets) and
+  * fp-tolerant-identical scores for EVERY shape
   * (SURVEY §5 property-test strategy; results must also be invariant to
   * parallelism, which the build specs cover). Deterministic seed —
   * failures reproduce exactly. */
 class FtsDifferentialFuzzSpec extends AnyFunSuite {
 
   private def spark = TestSpark.spark
+
+  /** Every field of `got` equals `ex`'s — doc, location, match text,
+    * snippet, language — with the score to 1e-8. */
+  private def assertSameResults(got: Seq[SearchResult], ex: Seq[SearchResult],
+                                what: String): Unit = {
+    assert(got.map(_.copy(score = 0.0)) === ex.map(_.copy(score = 0.0)), what)
+    got.zip(ex).foreach { case (a, b) =>
+      assert(math.abs(a.score - b.score) < 1e-8, s"score: $what") }
+  }
   private val cfg = FtsIndexBuilder.Config(nShards = 3, segmentPartitions = 4)
 
   /** Fixed default seed (deterministic CI); override with
@@ -91,19 +101,17 @@ class FtsDifferentialFuzzSpec extends AnyFunSuite {
     val queries = (0 until 40).map(_ => randQuery()) ++ mixed
     var nonEmpty = 0
     queries.foreach { q =>
-      val ex = idx.searchCollected(q).map(r => (r.doc_id, r.score))
+      val ex = idx.searchCollected(q)
       // doc 0 holds every fixed phrase
       if (mixed.contains(q)) assert(ex.nonEmpty, s"no match for $q ($tag)")
-      val wand = idx.searchWand(q).map(r => (r.doc_id, r.score))
-      val cached = cache.search(q).map(r => (r.doc_id, r.score))
-      val routed = clusterCache.search(q).map(r => (r.doc_id, r.score))
+      val wand = idx.searchWand(q)
       if (ex.nonEmpty) nonEmpty += 1
-      for ((what, got) <- Seq("WAND" -> wand, "cached" -> cached,
-                              "cluster-cached" -> routed)) {
-        assert(got.map(_._1) === ex.map(_._1), s"$what docs for $q ($tag)")
-        got.zip(ex).foreach { case (a, b) =>
-          assert(math.abs(a._2 - b._2) < 1e-8, s"$what score for $q ($tag)") }
-      }
+      // twice through each cache: the second pass serves from the rows
+      // (and text views) the first one cached
+      for ((what, got) <- Seq("WAND" -> wand, "cached" -> cache.search(q),
+                              "cached again" -> cache.search(q),
+                              "cluster-cached" -> clusterCache.search(q)))
+        assertSameResults(got, ex, s"$what results for $q ($tag)")
     }
     // the battery must actually exercise matching queries
     assert(nonEmpty >= 10, s"only $nonEmpty of ${queries.size} queries matched")
@@ -156,18 +164,12 @@ class FtsDifferentialFuzzSpec extends AnyFunSuite {
       val idx = rel.index // fresh snapshot over the new generation list
       val queries = (0 until 6).map(_ => randQuery()) ++ mixedPhrases(docs.head)
       queries.foreach { q =>
-        val ex = idx.searchCollected(q).map(r => (r.doc_id, r.score))
-        val wand = idx.searchWand(q).map(r => (r.doc_id, r.score))
-        val cached = rel.searchCached(q).map(r => (r.doc_id, r.score))
+        val ex = idx.searchCollected(q)
         if (ex.nonEmpty) nonEmpty += 1
-        assert(wand.map(_._1) === ex.map(_._1),
-          s"WAND docs for $q at churn round $round")
-        assert(cached.map(_._1) === ex.map(_._1),
-          s"cached docs for $q at churn round $round")
-        wand.zip(ex).foreach { case (a, b) =>
-          assert(math.abs(a._2 - b._2) < 1e-8, s"WAND score for $q") }
-        cached.zip(ex).foreach { case (a, b) =>
-          assert(math.abs(a._2 - b._2) < 1e-8, s"cached score for $q") }
+        assertSameResults(idx.searchWand(q), ex,
+          s"WAND results for $q at churn round $round")
+        assertSameResults(rel.searchCached(q), ex,
+          s"cached results for $q at churn round $round")
       }
     }
     assert(nonEmpty >= 8, s"battery matched only $nonEmpty queries")
@@ -194,20 +196,13 @@ class FtsDifferentialFuzzSpec extends AnyFunSuite {
       val q = FtsQuery(w, limit = Seq(0, 5)(rng.nextInt(2)),
         minLine = if (rng.nextBoolean()) Some(5L + rng.nextInt(20)) else None,
         maxLine = if (rng.nextBoolean()) Some(10L + rng.nextInt(30)) else None)
-      val ex = idx.searchCollected(q).map(r => (r.doc_id, r.score, r.line))
-      val wand = idx.searchWand(q).map(r => (r.doc_id, r.score, r.line))
-      val cached = cache.search(q).map(r => (r.doc_id, r.score, r.line))
+      val ex = idx.searchCollected(q)
       if (ex.nonEmpty) nonEmpty += 1
-      // docs and lines exact; scores fp-tolerant like the other
+      // every field exact but the score, fp-tolerant like the other
       // differential tests (two-field OR sums differ in summation order
       // between the paths — last-ulp only)
-      def loose(rs: Seq[(Long, Double, Int)]) = rs.map(r => (r._1, r._3))
-      assert(loose(wand) === loose(ex), s"WAND parity for $q")
-      assert(loose(cached) === loose(ex), s"cached parity for $q")
-      wand.zip(ex).foreach { case (a, b) =>
-        assert(math.abs(a._2 - b._2) < 1e-8, s"WAND score for $q") }
-      cached.zip(ex).foreach { case (a, b) =>
-        assert(math.abs(a._2 - b._2) < 1e-8, s"cached score for $q") }
+      assertSameResults(idx.searchWand(q), ex, s"WAND parity for $q")
+      assertSameResults(cache.search(q), ex, s"cached parity for $q")
     }
     assert(nonEmpty >= 5)
   }
